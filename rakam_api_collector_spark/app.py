@@ -43,6 +43,11 @@ config dict:
     }
 
 ``start`` returns the running StreamingQuery list (realtime first).
+Every query runs with the A2 per-collection counters and the ST11
+error-rate kill-switch on at the reference thresholds (>40% of >100
+records failed within 5 minutes stops the query), each query its own
+pair, read as ``query.stats`` (``committer.IngestStats``) and
+``query.error_monitor`` (``committer.ErrorRateMonitor``).
 Kafka/Kinesis branches require their connector jars (sources/kafka.py,
 sources/kinesis.py); the file branch is the in-environment path and
 exercises the identical downstream pipeline.
@@ -53,6 +58,8 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 
 from rakam_api_collector_spark.ingest.catalog import Catalog
+from rakam_api_collector_spark.streaming.committer import (ErrorRateMonitor,
+                                                           IngestStats)
 from rakam_api_collector_spark.streaming.pipeline import (
     start_avro_historical_stream, start_avro_ingest_stream,
     start_historical_stream, start_ingest_stream)
@@ -73,9 +80,15 @@ def start(spark: SparkSession, cfg: dict) -> list:
 
     catalog = Catalog(cfg.get("catalog_path"))
     hist = cfg.get("historical") or {}
+    manifested = cfg.get("manifested", False)
     queries = []
 
-    if cfg.get("manifested"):
+    def counters() -> dict:
+        # one pair per stream: each query's foreachBatch runs on its
+        # own thread, and the counters are not shared-state safe
+        return {"stats": IngestStats(), "error_monitor": ErrorRateMonitor()}
+
+    if manifested:
         # downstream consumers read the committed tables through
         # spark.read/readStream.format("manifest") (datasource.py)
         from rakam_api_collector_spark.datasource import register
@@ -150,9 +163,10 @@ def start(spark: SparkSession, cfg: dict) -> list:
             bulk_base=cfg.get("bulk_base"),
             source_stream=source_stream,
             errors_dir=cfg.get("errors_dir"),
-            manifested=cfg.get("manifested", False),
+            manifested=manifested,
             maintenance=cfg.get("maintenance"),
-            state_partitions=cfg.get("state_partitions")))
+            state_partitions=cfg.get("state_partitions"),
+            **counters()))
         if hist.get("dir") or hist_stream is not None:
             queries.append(start_avro_historical_stream(
                 spark, hist.get("dir"), catalog, tgt["base"],
@@ -167,7 +181,9 @@ def start(spark: SparkSession, cfg: dict) -> list:
                 source="kinesis" if kin else "kafka",
                 bulk_base=cfg.get("bulk_base"),
                 source_stream=hist_stream,
-                errors_dir=cfg.get("errors_dir")))
+                errors_dir=cfg.get("errors_dir"),
+                manifested=manifested,
+                **counters()))
         return queries
 
     queries.append(start_ingest_stream(
@@ -181,10 +197,11 @@ def start(spark: SparkSession, cfg: dict) -> list:
         now=cfg.get("now"),
         source_stream=source_stream,
         errors_dir=cfg.get("errors_dir"),
-        manifested=cfg.get("manifested", False),
+        manifested=manifested,
         layout=cfg.get("layout", "per-table"),
         maintenance=cfg.get("maintenance"),
-        state_partitions=cfg.get("state_partitions")))
+        state_partitions=cfg.get("state_partitions"),
+        **counters()))
 
     if hist.get("dir") or hist_stream is not None:
         queries.append(start_historical_stream(
@@ -195,5 +212,8 @@ def start(spark: SparkSession, cfg: dict) -> list:
                              else {"processingTime": "30 minutes"}),
             shard_time=cfg.get("shard_time"),
             source_stream=hist_stream,
-            errors_dir=cfg.get("errors_dir")))
+            errors_dir=cfg.get("errors_dir"),
+            manifested=manifested,
+            layout=cfg.get("layout", "per-table"),
+            **counters()))
     return queries

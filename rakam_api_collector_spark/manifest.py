@@ -822,9 +822,10 @@ def _one_file_stats(md, max_cols: int = 32) -> dict:
 
 
 def _footer_stats(path: str, fmt: str, max_cols: int = 32,
-                  max_files: int = 64) -> tuple[dict | None, list | None]:
-    """Zone maps from parquet FOOTERS only (no data pages read), at two
-    granularities: (batch_stats, file_stats).
+                  max_files: int = 64
+                  ) -> tuple[dict | None, list | None, int | None]:
+    """Zone maps and the row count from parquet FOOTERS only (no data
+    pages read, no Spark job): (batch_stats, file_stats, rows).
 
     - batch_stats: {col: [min, max]} across every row group of every
       file — the manifest-entry zone map read() uses to skip whole
@@ -835,24 +836,30 @@ def _footer_stats(path: str, fmt: str, max_cols: int = 32,
       writes the files carry disjoint ranges, so a key-range read opens
       ~1 file. Omitted (None) past ``max_files`` to bound manifest
       size — batch-level pruning still applies.
+    - rows: the sum of every footer's ``num_rows``, zero-row files
+      included — the batch's exact row count.
 
-    ORC returns (None, None) (never pruned, always read). A column
+    ORC, and a path that is not a local directory, return
+    (None, None, None): never pruned, always read, counted by the
+    caller. A column
     qualifies at a granularity only if EVERY row group in its scope
     carries min/max — one stats-less chunk (all-null chunk, writer
     with statistics disabled, pyarrow-unextractable physical type)
     means partial coverage, and pruning on partial coverage silently
     loses rows."""
-    if fmt != "parquet":
-        return None, None
+    if fmt != "parquet" or not os.path.isdir(path):
+        return None, None, None
     import pyarrow.parquet as pq
 
     per_file: list = []
+    rows = 0
     for root, _, files in os.walk(path):
         for fn in files:
             if not fn.endswith(".parquet"):
                 continue
             full = os.path.join(root, fn)
             md = pq.ParquetFile(full).metadata
+            rows += md.num_rows
             if md.num_rows == 0:
                 # a zero-row file (empty upstream partition) has no
                 # stats and no rows to lose: keeping it would void the
@@ -863,7 +870,7 @@ def _footer_stats(path: str, fmt: str, max_cols: int = 32,
             per_file.append({"path": os.path.relpath(full, path),
                              "stats": _one_file_stats(md, max_cols)})
     if not per_file:
-        return None, None
+        return None, None, rows
     # batch level: a column must be fully covered in EVERY file
     batch: dict = {}
     common = set(per_file[0]["stats"])
@@ -873,7 +880,7 @@ def _footer_stats(path: str, fmt: str, max_cols: int = 32,
         batch[c] = [min(f["stats"][c][0] for f in per_file),
                     max(f["stats"][c][1] for f in per_file)]
     files = per_file if len(per_file) <= max_files else None
-    return (batch or None), files
+    return (batch or None), files, rows
 
 
 def _bloom_build(spark: SparkSession, path: str, fmt: str,
@@ -1127,6 +1134,10 @@ class ManifestedTable:
         # object-store equivalent); Spark/pyarrow data paths do not
         self.meta = meta or LocalMetadataStore()
         self._log = VersionLog(self.versions_dir, self.meta)
+        #: the manifest entry the last write() committed; its ``rows``
+        #: is the batch's exact count, so a caller accounting per
+        #: commit reads it instead of counting the frame again
+        self.last_entry: dict | None = None
 
     # -- version protocol (the shared VersionLog, batch-set states) ----------
 
@@ -1298,6 +1309,7 @@ class ManifestedTable:
             return [b for b in live if b["batch"] != bid] + [entry]
 
         self._commit(mutate)
+        self.last_entry = entry
         return bid
 
     def _write_batch_files(self, out: DataFrame, bid: str, fmt: str,
@@ -1318,13 +1330,15 @@ class ManifestedTable:
         if partition:
             writer = writer.partitionBy("_day")
         writer.save(path)
+        stats, files, footer_rows = _footer_stats(path, fmt)
         if rows is None:
-            # row count read back from the just-written footers
-            # (metadata scan), not by re-running the batch's lineage
+            rows = footer_rows
+        if rows is None:
+            # ORC: no footer walk, so a Spark count over the written
+            # files (schema inference + count, two jobs)
             rows = out.sparkSession.read.format(fmt).load(path).count()
         entry = {"batch": bid, "dir": pdir, "rows": rows, "format": fmt,
                  "schema": json.loads(out.schema.json())}
-        stats, files = _footer_stats(path, fmt)
         if stats:
             entry["stats"] = stats
         if files:

@@ -112,7 +112,8 @@ def write_collections(tables: dict[tuple[str, str], DataFrame], base: str,
                       fmt: str = "parquet", partition_by_day: bool = True,
                       max_records_per_file: int = SHARD_MAX_ROWS,
                       max_concurrent: int = 16,
-                      coalesce_to: int | None = None) -> None:
+                      coalesce_to: int | None = None
+                      ) -> dict[tuple[str, str], int]:
     """Append each typed collection batch to its table directory,
     day-partitioned on _time (R3's day index becomes physical layout —
     partition pruning replaces the historical day→indexes map).
@@ -121,12 +122,21 @@ def write_collections(tables: dict[tuple[str, str], DataFrame], base: str,
     overlaps the independent jobs, so 100 collections cost ~the longest
     write, not the sum — the reference's async per-table committer
     (TargetConnectorCommitter.java:41-76) by other means. Thread count
-    mirrors its IO_OPS_RATE-style cap."""
+    mirrors its IO_OPS_RATE-style cap.
+
+    Returns ``{(project, collection): rows written}``, collected by an
+    Observation on each write's own job (A2's per-table count at no
+    extra Spark job)."""
     from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.sql import Observation
 
     def write_one(item):
         (project, collection), df = item
-        out = df
+        # observed before the repartition below: the count rides the
+        # write, and Observation.get is read only after save() returned
+        obs = Observation()
+        out = df.observe(obs, F.count(F.lit(1)).alias("n"))
         if coalesce_to:
             # many-small-collections micro-batches: N tasks × M day
             # partitions explodes into tiny files without this; large
@@ -144,21 +154,20 @@ def write_collections(tables: dict[tuple[str, str], DataFrame], base: str,
         if partition_by_day and "_time" in df.columns:
             writer = writer.partitionBy("_day")
         writer.save(table_path(base, project, collection))
+        return (project, collection), obs.get["n"]
 
     if len(tables) <= 1:
-        for item in tables.items():
-            write_one(item)
-        return
+        return dict(map(write_one, tables.items()))
     with ThreadPoolExecutor(min(max_concurrent, len(tables))) as pool:
-        # list() propagates the first failure (commit must not be silent)
-        list(pool.map(write_one, tables.items()))
+        # dict() propagates the first failure (commit must not be silent)
+        return dict(pool.map(write_one, tables.items()))
 
 
 def write_collections_grouped(result, base: str, fmt: str = "parquet",
                               partition_by_day: bool = True,
                               max_records_per_file: int = SHARD_MAX_ROWS,
                               writer_tasks: int | None = 0,
-                              ) -> None:
+                              ) -> dict[tuple[str, str], int]:
     """Write an ``IngestResult`` as ONE job per (project, schema-group)
     instead of one per collection: the group frame (which carries
     ``_collection``) writes with dynamic partitioning on
@@ -197,9 +206,19 @@ def write_collections_grouped(result, base: str, fmt: str = "parquet",
       session's core count.
 
     Either way each combo lands in a bounded number of tasks, so
-    files scale with #combos and maxRecordsPerFile, not #tasks."""
-    for project, _collections, df in result.groups:
-        out = df
+    files scale with #combos and maxRecordsPerFile, not #tasks.
+
+    Returns ``{(project, collection): rows written}`` from one
+    Observation per group write: a ``count_if`` per collection rides
+    the group's single job."""
+    from pyspark.sql import Observation
+
+    counts: dict[tuple[str, str], int] = {}
+    for project, collections, df in result.groups:
+        obs = Observation()
+        out = df.observe(obs, *[
+            F.count_if(F.col("_collection") == c).alias(f"n{i}")
+            for i, c in enumerate(collections)])
         if partition_by_day and "_time" in df.columns:
             out = out.withColumn("_day", F.to_date("_time"))
             parts = ["_collection", "_day"]
@@ -211,6 +230,10 @@ def write_collections_grouped(result, base: str, fmt: str = "parquet",
          .option("maxRecordsPerFile", max_records_per_file)
          .partitionBy(*parts)
          .save(f"{base}/{project}"))
+        got = obs.get
+        counts.update(((project, c), got[f"n{i}"])
+                      for i, c in enumerate(collections))
+    return counts
 
 
 def _grouped_writer_frame(out: DataFrame, parts: list[str],

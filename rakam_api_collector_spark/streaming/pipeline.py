@@ -288,15 +288,16 @@ def _pinned_epoch_date(spark: SparkSession, checkpoint: str,
 
 def _commit_tables(tables, table_base: str, manifested: bool,
                    checkpoint: str, epoch_id: int,
-                   layout: str = "per-table") -> None:
-    """Per-micro-batch table commit, shared by the JSON and Avro
-    realtime paths. Plain mode appends via write_collections; manifested
-    mode commits each collection through the version-file protocol with
-    a (checkpoint-namespace, epoch) idempotency key — a replayed
-    foreachBatch from the SAME checkpoint replaces its batch, while a
-    fresh checkpoint (new incarnation) or a second query appends.
-    Per-collection commits overlap from a thread pool either way
-    (manifest.py; RaptorDatabaseHandler.java:312-339).
+                   layout: str = "per-table") -> dict[tuple[str, str], int]:
+    """Per-micro-batch table commit, shared by the realtime paths and
+    the historical drains. Plain mode appends via write_collections;
+    manifested mode commits each collection through the version-file
+    protocol with a (checkpoint-namespace, epoch) idempotency key — a
+    replayed foreachBatch from the SAME checkpoint replaces its batch,
+    while a fresh checkpoint (new incarnation, or the drain's own
+    checkpoint) or a second query appends. Per-collection commits
+    overlap from a thread pool either way (manifest.py;
+    RaptorDatabaseHandler.java:312-339).
 
     ``layout="grouped"`` commits ONE write job per (project,
     schema-group) via ``write_collections_grouped`` (Hive-style
@@ -306,23 +307,27 @@ def _commit_tables(tables, table_base: str, manifested: bool,
     the sink whose job count scales with #schemas, not #collections.
     Requires a result carrying ``.groups`` (the JSON ingest path);
     incompatible with ``manifested`` (the manifest protocol is
-    per-collection by design)."""
+    per-collection by design).
+
+    Returns ``{(project, collection): rows written}``, read from what
+    the commit wrote rather than counted again: the manifest entry's
+    footer-summed ``rows`` in manifested mode, an Observation riding
+    each write in the plain and grouped modes. The A2/ST11 counters
+    (``_account``) read it, so they cost no per-collection job."""
     if layout == "grouped":
         if manifested:
             raise ValueError("layout='grouped' and manifested=True are "
                              "incompatible — the manifest commit "
                              "protocol is per-collection")
         if len(tables) == 0:        # empty micro-batch: nothing to commit
-            return
+            return {}
         if not getattr(tables, "groups", None):
             raise ValueError("layout='grouped' needs an IngestResult "
                              "with schema-group frames (JSON ingest "
                              "path)")
-        write_collections_grouped(tables, table_base)
-        return
+        return write_collections_grouped(tables, table_base)
     if not manifested:
-        write_collections(tables, table_base)
-        return
+        return write_collections(tables, table_base)
     from concurrent.futures import ThreadPoolExecutor
     from hashlib import md5 as _md5
 
@@ -331,15 +336,43 @@ def _commit_tables(tables, table_base: str, manifested: bool,
 
     def commit_one(item):
         (project, collection), df = item
-        ManifestedTable(table_base, project, collection) \
-            .write(df, batch_id=f"{ns}-epoch-{epoch_id}")
+        table = ManifestedTable(table_base, project, collection)
+        table.write(df, batch_id=f"{ns}-epoch-{epoch_id}")
+        return (project, collection), table.last_entry["rows"]
 
     if len(tables) <= 1:
-        for item in tables.items():
-            commit_one(item)
-    else:
-        with ThreadPoolExecutor(min(16, len(tables))) as pool:
-            list(pool.map(commit_one, tables.items()))
+        return dict(map(commit_one, tables.items()))
+    with ThreadPoolExecutor(min(16, len(tables))) as pool:
+        return dict(pool.map(commit_one, tables.items()))
+
+
+def _account(committed: dict[tuple[str, str], int], failed: int,
+             stats, error_monitor) -> None:
+    """A2 per-collection counters + ST11 kill-switch for one epoch.
+    ``committed`` is ``_commit_tables``' rows-written dict, ``failed``
+    the epoch's rejected records; neither costs a Spark job here."""
+    if stats is not None:
+        for (project, collection), n in committed.items():
+            stats.add(project, collection, n)
+    if error_monitor is not None:
+        error_monitor.record(ok=sum(committed.values()), failed=failed)
+        if error_monitor.should_kill():
+            # the reference exits the process (KafkaUtil.java:162-166);
+            # failing the batch fails the StreamingQuery, the driver's
+            # analog
+            raise RuntimeError(
+                "error-rate kill-switch tripped (ST11): the share of "
+                "records that failed parsing crossed the monitor's "
+                "threshold within its window")
+
+
+def _expose(query, maint_hook=None, stats=None, error_monitor=None):
+    """Hang the stream's maintenance hook and counters on the returned
+    query, the surface operators and tests read."""
+    query.maintenance = maint_hook
+    query.stats = stats
+    query.error_monitor = error_monitor
+    return query
 
 
 def start_ingest_stream(spark: SparkSession, source_dir: str, fmt: str,
@@ -415,6 +448,13 @@ def start_ingest_stream(spark: SparkSession, source_dir: str, fmt: str,
     / ``sinks.write_collections_grouped``); read back with
     ``sinks.read_collection_grouped``. Pick it for
     many-small-collections streams (the reference stress shape).
+
+    ``stats`` (``committer.IngestStats``, A2) and ``error_monitor``
+    (``committer.ErrorRateMonitor``, ST11) read the rows each commit
+    wrote, so they cost no per-collection job; with a K3 channel the
+    monitor's failure count needs one count of the split's hot rows.
+    Both are exposed on the query as ``query.stats`` /
+    ``query.error_monitor``.
     """
     if layout not in ("per-table", "grouped"):
         raise ValueError(f"unknown layout {layout!r}: "
@@ -469,19 +509,39 @@ def start_ingest_stream(spark: SparkSession, source_dir: str, fmt: str,
         batch = batch.select("value", "_event_time").cache()
         tables = None
         try:
+            # ONE full action first. It materializes the cache, and it
+            # executes every partition — the dedup operator commits its
+            # RocksDB state only in partitions an action ran (isEmpty's
+            # executeTake may stop early). Dead letters are counted in
+            # the same job.
+            if errors_dir is not None:
+                bad = _envelope_reject_predicate(fmt)
+                n_batch, n_dead = batch.agg(F.count(F.lit(1)),
+                                            F.count_if(bad)).first()
+            else:
+                n_batch, n_dead = batch.count(), 0
+            if n_batch == 0:
+                # an empty epoch (Spark's no-data batch, run only to
+                # advance the watermark and evict state) has nothing
+                # to split, hand off, decode or commit; the hook still
+                # ticks, its cadence counts epoch ids
+                if maint_hook is not None:
+                    maint_hook.after_epoch(epoch_id)
+                return
             if errors_dir is not None:
                 # dead-letter spool, on the PRE-SPLIT batch: malformed
                 # envelopes carry a null event time, so split_late would
                 # route them historical — spooling first keeps the
                 # per-micro-batch contract and lets the split below
                 # exclude them from the valid-late spool
-                bad = _envelope_reject_predicate(fmt)
-                _spool_dead_letters(batch.filter(bad), errors_dir,
-                                    epoch_id)
+                if n_dead:
+                    _spool_dead_letters(batch.filter(bad), errors_dir,
+                                        epoch_id)
                 splittable = batch.filter(~bad)
             else:
                 splittable = batch
-            if historical_producer is not None or historical_dir is not None:
+            k3 = historical_producer is not None or historical_dir is not None
+            if k3:
                 # K3 historical handoff — topic form (late envelopes
                 # re-published to the historical Kafka topic for the
                 # slow-cadence drain worker, KafkaHistoricalDataHandler
@@ -519,34 +579,19 @@ def start_ingest_stream(spark: SparkSession, source_dir: str, fmt: str,
             tables = ingest_batch(spark, hot.select("value"), fmt, catalog,
                                   shard_time=shard_time,
                                   time_field=time_field)
-            _commit_tables(tables, table_base, manifested,
-                           checkpoint, epoch_id, layout=layout)
+            committed = _commit_tables(tables, table_base, manifested,
+                                       checkpoint, epoch_id, layout=layout)
             if maint_hook is not None:
                 maint_hook.after_epoch(epoch_id)
-            if stats is not None or error_monitor is not None:
-                # A2 per-collection counters + ST11 kill-switch; opt-in
-                # because the counts are extra actions per micro-batch.
-                # Dead-lettered rows never reach `hot`, so they are
-                # added back into the failure count explicitly.
-                n_in = hot.count()
-                n_dead = (batch.filter(bad).count()
-                          if errors_dir is not None else 0)
-                n_ok = 0
-                for (project, collection), df in tables.items():
-                    n = df.count()
-                    n_ok += n
-                    if stats is not None:
-                        stats.add(project, collection, n)
-                if error_monitor is not None:
-                    error_monitor.record(
-                        ok=n_ok, failed=max(n_in - n_ok, 0) + n_dead)
-                    if error_monitor.should_kill():
-                        # the reference exits the process
-                        # (KafkaUtil.java:162-166); failing the batch
-                        # fails the StreamingQuery, the driver's analog
-                        raise RuntimeError(
-                            "error-rate kill-switch tripped (ST11): "
-                            ">40% of records failed parsing in 5 min")
+            failed = 0
+            if error_monitor is not None:
+                # records the parser dropped are the hot rows that were
+                # not committed; only a K3 split makes the hot count
+                # unknown (one job). Dead-lettered rows never reach
+                # `hot`, so they are added back explicitly
+                n_in = hot.count() if k3 else n_batch - n_dead
+                failed = max(n_in - sum(committed.values()), 0) + n_dead
+            _account(committed, failed, stats, error_monitor)
         finally:
             if tables is not None:
                 tables.unpersist()
@@ -556,9 +601,8 @@ def start_ingest_stream(spark: SparkSession, source_dir: str, fmt: str,
               .foreachBatch(process)
               .option("checkpointLocation", checkpoint))
     trig = trigger or {"availableNow": True}
-    query = writer.trigger(**trig).start()
-    query.maintenance = maint_hook
-    return query
+    return _expose(writer.trigger(**trig).start(), maint_hook, stats,
+                   error_monitor)
 
 
 class AvroBatchResult(dict):
@@ -732,6 +776,22 @@ def start_avro_ingest_stream(spark: SparkSession, source_dir: str | None,
                               "_event_time").cache())
         tables = None
         try:
+            # one full action first, as on the JSON path (it commits
+            # the dedup state in every partition); it also counts the
+            # corrupt frames. Deserialization failures are tagged
+            # _kind='corrupt' at routing (extract_stream_routing), so
+            # this is the exact ST11 failure count — the reference's
+            # per-message poison-pill accounting (KafkaUtil.java:
+            # 150-166) — taken on the PRE-SPLIT batch, independent of
+            # routing details
+            n_batch, n_bad = batch.agg(
+                F.count(F.lit(1)),
+                F.count_if(F.col("_kind") == "corrupt")).first()
+            if n_batch == 0:
+                # empty epoch: nothing to do but tick the hook
+                if maint_hook is not None:
+                    maint_hook.after_epoch(epoch_id)
+                return
             if historical_dir is not None:
                 # K3: spool raw FRAMES (not typed rows) for the slow
                 # worker — parquet with a single binary column, the
@@ -763,7 +823,7 @@ def start_avro_ingest_stream(spark: SparkSession, source_dir: str | None,
                     .unionByName(rt)
             else:
                 hot = batch
-            if errors_dir is not None:
+            if errors_dir is not None and n_bad:
                 # dead-letter spool: raw frame + cheap forensics cols;
                 # stays hot-path-exact because corrupt never spools
                 _spool_corrupt_frames(batch, errors_dir, epoch_id)
@@ -776,32 +836,11 @@ def start_avro_ingest_stream(spark: SparkSession, source_dir: str | None,
                     "_shard_time", F.coalesce(
                         "_shard_time", F.lit(shard_time).cast("timestamp")))
                     for k, df in tables.items()}
-            _commit_tables(out, table_base, manifested, checkpoint,
-                           epoch_id)
+            committed = _commit_tables(out, table_base, manifested,
+                                       checkpoint, epoch_id)
             if maint_hook is not None:
                 maint_hook.after_epoch(epoch_id)
-            if stats is not None or error_monitor is not None:
-                # A2 counters + ST11 kill-switch, as on the JSON path.
-                # Deserialization failures are tagged _kind='corrupt' at
-                # routing (extract_stream_routing), so the failure count
-                # is exact — the reference's per-message poison-pill
-                # accounting (KafkaUtil.java:150-166). Counted on the
-                # PRE-SPLIT batch: corrupt frames never divert to the
-                # spool (they stay hot), but counting the full batch
-                # keeps the invariant independent of routing details.
-                n_bad = batch.filter(F.col("_kind") == "corrupt").count()
-                n_ok = 0
-                for (p, c), df in tables.items():
-                    n = df.count()
-                    if stats is not None:
-                        stats.add(p, c, n)
-                    n_ok += n
-                if error_monitor is not None:
-                    error_monitor.record(ok=n_ok, failed=n_bad)
-                    if error_monitor.should_kill():
-                        raise RuntimeError(
-                            "error-rate kill-switch tripped (ST11): "
-                            ">40% of records failed parsing in 5 min")
+            _account(committed, n_bad, stats, error_monitor)
         finally:
             if tables is not None:
                 tables.unpersist()
@@ -811,9 +850,8 @@ def start_avro_ingest_stream(spark: SparkSession, source_dir: str | None,
               .foreachBatch(process)
               .option("checkpointLocation", checkpoint))
     trig = trigger or {"availableNow": True}
-    query = writer.trigger(**trig).start()
-    query.maintenance = maint_hook
-    return query
+    return _expose(writer.trigger(**trig).start(), maint_hook, stats,
+                   error_monitor)
 
 
 def start_avro_historical_stream(spark: SparkSession, historical_dir: str,
@@ -825,12 +863,16 @@ def start_avro_historical_stream(spark: SparkSession, historical_dir: str,
                                  bulk_base: str | None = None,
                                  source_stream: DataFrame | None = None,
                                  stats=None, error_monitor=None,
-                                 errors_dir: str | None = None):
+                                 errors_dir: str | None = None,
+                                 manifested: bool = False):
     """ST5 for the Avro path: drain the raw-frame parquet spool written
     by ``start_avro_ingest_stream`` (or a historical Kafka topic via
     ``source_stream``) into the same tables — no late split, no dedup
     (already done on the hot path), mirroring
-    KafkaHistoricalWorker.java:157-219.
+    KafkaHistoricalWorker.java:157-219. ``manifested`` must match the
+    realtime stream's: the drain then commits through the same version
+    protocol, its batch ids namespaced by its own checkpoint, so a
+    replayed drain epoch replaces its batch.
 
     The hot path never spools corrupt frames, but a historical TOPIC
     (``source_stream``) can deliver them, so the same A2/ST11
@@ -856,10 +898,9 @@ def start_avro_historical_stream(spark: SparkSession, historical_dir: str,
 
     def process(batch: DataFrame, epoch_id: int) -> None:
         batch = batch.select("_kind", "_collection", "value")
-        if (stats is not None or error_monitor is not None
-                or errors_dir is not None):
-            # any accounting/spool option re-reads the batch beyond the
-            # decode pass — cache so counts don't re-run routing
+        if error_monitor is not None or errors_dir is not None:
+            # the corrupt count and the spool re-read the batch beyond
+            # the decode pass — cache so they don't re-run routing
             batch = batch.cache()
         tables = _decode_avro_frames(
             spark, batch, get_columns, project, default_collection,
@@ -871,25 +912,14 @@ def start_avro_historical_stream(spark: SparkSession, historical_dir: str,
                     "_shard_time", F.coalesce(
                         "_shard_time", F.lit(shard_time).cast("timestamp")))
                     for k, df in tables.items()}
-            write_collections(out, table_base)
+            committed = _commit_tables(out, table_base, manifested,
+                                       checkpoint, epoch_id)
             if errors_dir is not None:
                 _spool_corrupt_frames(batch, errors_dir, epoch_id,
                                       stream="historical")
-            if stats is not None or error_monitor is not None:
-                n_ok = 0
-                for (p, c), df in tables.items():
-                    n = df.count()
-                    if stats is not None:
-                        stats.add(p, c, n)
-                    n_ok += n
-                if error_monitor is not None:
-                    n_bad = batch.filter(
-                        F.col("_kind") == "corrupt").count()
-                    error_monitor.record(ok=n_ok, failed=n_bad)
-                    if error_monitor.should_kill():
-                        raise RuntimeError(
-                            "error-rate kill-switch tripped (ST11): "
-                            ">40% of records failed parsing in 5 min")
+            n_bad = (batch.filter(F.col("_kind") == "corrupt").count()
+                     if error_monitor is not None else 0)
+            _account(committed, n_bad, stats, error_monitor)
         finally:
             tables.unpersist()
             batch.unpersist()
@@ -898,7 +928,8 @@ def start_avro_historical_stream(spark: SparkSession, historical_dir: str,
               .foreachBatch(process)
               .option("checkpointLocation", checkpoint))
     trig = trigger or {"availableNow": True}
-    return writer.trigger(**trig).start()
+    return _expose(writer.trigger(**trig).start(), stats=stats,
+                   error_monitor=error_monitor)
 
 
 def start_historical_stream(spark: SparkSession, historical_dir: str | None,
@@ -906,7 +937,10 @@ def start_historical_stream(spark: SparkSession, historical_dir: str | None,
                             checkpoint: str, trigger: dict | None = None,
                             time_field: str = "_time", shard_time=None,
                             source_stream: DataFrame | None = None,
-                            errors_dir: str | None = None):
+                            errors_dir: str | None = None,
+                            manifested: bool = False,
+                            layout: str = "per-table",
+                            stats=None, error_monitor=None):
     """ST5: drain the historical spool in big, low-frequency batches
     (reference: 30 min cadence or 500k-record lag,
     KafkaHistoricalWorker.java:157-219) into the same tables — no late
@@ -914,7 +948,17 @@ def start_historical_stream(spark: SparkSession, historical_dir: str | None,
     substitutes a connector stream (e.g. the historical Kafka topic,
     ``sources.kafka.historical_reader(...).load()``) for the spool dir;
     such a topic can carry envelopes the parser would drop, so
-    ``errors_dir`` dead-letters them exactly as on the realtime path."""
+    ``errors_dir`` dead-letters them exactly as on the realtime path,
+    and they count as failures for ``error_monitor``.
+
+    ``manifested`` and ``layout`` must match the realtime stream's, so
+    drained rows land in the tables its readers read: manifested
+    commits go through the version protocol with batch ids namespaced
+    by the drain's own checkpoint, so a replayed drain epoch replaces
+    its batch instead of appending it twice."""
+    if layout not in ("per-table", "grouped"):
+        raise ValueError(f"unknown layout {layout!r}: "
+                         "expected 'per-table' or 'grouped'")
     if source_stream is not None:
         raw = source_stream.select(
             F.col("value").cast("string").alias("value"))
@@ -922,19 +966,33 @@ def start_historical_stream(spark: SparkSession, historical_dir: str | None,
         raw = spark.readStream.format("text").load(historical_dir)
 
     def process(batch: DataFrame, epoch_id: int) -> None:
-        if errors_dir is not None:
-            _spool_dead_letters(
-                batch.filter(_envelope_reject_predicate(fmt)), errors_dir,
-                epoch_id, stream="historical")
-        tables = ingest_batch(spark, batch, fmt, catalog,
-                              shard_time=shard_time, time_field=time_field)
+        if error_monitor is not None:
+            # the failure count re-reads the batch beyond the parse
+            batch = batch.cache()
+        tables = None
         try:
-            write_collections(tables, table_base)
+            if errors_dir is not None:
+                _spool_dead_letters(
+                    batch.filter(_envelope_reject_predicate(fmt)),
+                    errors_dir, epoch_id, stream="historical")
+            tables = ingest_batch(spark, batch, fmt, catalog,
+                                  shard_time=shard_time,
+                                  time_field=time_field)
+            committed = _commit_tables(tables, table_base, manifested,
+                                       checkpoint, epoch_id, layout=layout)
+            # every record that was not committed was dropped by the
+            # router/parser (or dead-lettered)
+            failed = (max(batch.count() - sum(committed.values()), 0)
+                      if error_monitor is not None else 0)
+            _account(committed, failed, stats, error_monitor)
         finally:
-            tables.unpersist()
+            if tables is not None:
+                tables.unpersist()
+            batch.unpersist()
 
     writer = (raw.writeStream
               .foreachBatch(process)
               .option("checkpointLocation", checkpoint))
     trig = trigger or {"availableNow": True}
-    return writer.trigger(**trig).start()
+    return _expose(writer.trigger(**trig).start(), stats=stats,
+                   error_monitor=error_monitor)

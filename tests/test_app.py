@@ -192,3 +192,128 @@ def test_kinesis_python_connector_end_to_end(spark, tmp_path):
     rows = sorted(r["_user"] for r in read_collection(
         spark, cfg["target"]["base"], "p", "ev", cat).collect())
     assert rows == [f"u{i}" for i in range(6)] + ["u9"]
+
+
+def _late_envelope(i: int, coll: str = "ev") -> str:
+    """20 days before the configured ``now``: the late split hands it
+    to the historical channel."""
+    return json.dumps({"id": i, "metadata": {}, "data": {
+        "_project": "p", "_collection": coll, "_user": f"late{i}",
+        "_time": 1704067200000 - 20 * 86_400_000 + i * 1000,
+        "x": float(i)}})
+
+
+def test_manifested_app_with_historical_drain_exactly_once(spark, tmp_path):
+    """manifested + historical: the drain commits through the same
+    version protocol as the realtime stream, so format("manifest")
+    sees every realtime and drained row exactly once — also after a
+    replayed drain epoch (its last commit file deleted, drain
+    restarted), which replaces its batch instead of appending it."""
+    import os
+
+    src = tmp_path / "in"
+    src.mkdir()
+    (src / "batch0.txt").write_text("\n".join(
+        [_envelope(i) for i in range(6)]
+        + [_late_envelope(i) for i in range(4)]))
+    (tmp_path / "hist").mkdir()
+    cfg = {
+        "format": "fabric",
+        "source": {"type": "file", "path": str(src)},
+        "target": {"type": "parquet", "base": str(tmp_path / "tables")},
+        "catalog_path": str(tmp_path / "catalog.json"),
+        "checkpoint": str(tmp_path / "ckpt"),
+        "historical": {"dir": str(tmp_path / "hist"),
+                       "checkpoint": str(tmp_path / "ckpt_hist")},
+        "dedup": False,
+        "manifested": True,
+        "shard_time": "2024-01-02 00:00:00",
+        "now": "2024-01-01",
+    }
+    want = sorted([f"u{i}" for i in range(6)]
+                  + [f"late{i}" for i in range(4)])
+
+    def users():
+        got = (spark.read.format("manifest")
+               .option("path", f"{cfg['target']['base']}/p/ev").load())
+        return sorted(r["_user"] for r in got.collect())
+
+    # the drain may list the spool before the realtime epoch wrote it:
+    # a second start drains whatever the first one missed
+    for _ in range(2):
+        for q in app.start(spark, cfg):
+            assert q.awaitTermination(120)
+    assert users() == want
+
+    commits = tmp_path / "ckpt_hist" / "commits"
+    last = max(int(n) for n in os.listdir(commits) if n.isdigit())
+    for f in (str(last), f".{last}.crc"):   # the file and its checksum
+        if (commits / f).exists():
+            os.remove(commits / f)
+    for q in app.start(spark, cfg):
+        assert q.awaitTermination(120)
+    assert users() == want
+    # nothing was appended outside the version protocol
+    assert not list((tmp_path / "tables" / "p" / "ev").glob("_day=*"))
+
+
+def test_grouped_app_with_historical_drain(spark, tmp_path):
+    """layout='grouped' + historical: the drain writes the grouped
+    layout too, so read_collection_grouped sees realtime and drained
+    rows alike."""
+    from rakam_api_collector_spark.sinks import read_collection_grouped
+
+    src = tmp_path / "in"
+    src.mkdir()
+    (src / "batch0.txt").write_text("\n".join(
+        [_envelope(i) for i in range(3)]
+        + [_late_envelope(i) for i in range(2)]))
+    (tmp_path / "hist").mkdir()
+    cfg = {
+        "format": "fabric",
+        "source": {"type": "file", "path": str(src)},
+        "target": {"type": "parquet", "base": str(tmp_path / "tables")},
+        "catalog_path": str(tmp_path / "catalog.json"),
+        "checkpoint": str(tmp_path / "ckpt"),
+        "historical": {"dir": str(tmp_path / "hist")},
+        "dedup": False,
+        "layout": "grouped",
+        "shard_time": "2024-01-02 00:00:00",
+        "now": "2024-01-01",
+    }
+    for _ in range(2):      # the second start drains what the first missed
+        for q in app.start(spark, cfg):
+            assert q.awaitTermination(120)
+    got = read_collection_grouped(spark, cfg["target"]["base"], "p", "ev",
+                                  Catalog(cfg["catalog_path"]))
+    assert sorted(r["_user"] for r in got.collect()) == \
+        ["late0", "late1", "u0", "u1", "u2"]
+
+
+def test_app_error_rate_kill_switch_trips(spark, tmp_path):
+    """app.start turns the ST11 kill-switch and the A2 counters on with
+    the reference defaults: a source that is mostly malformed envelopes
+    fails the query, and the counters are exposed on it."""
+    import pyspark.errors
+
+    src = tmp_path / "in"
+    src.mkdir()
+    lines = ([_envelope(i) for i in range(30)]
+             + ['{"id": %d, "metadata": {}, "data": {broken' % i
+                for i in range(120)])
+    (src / "batch0.txt").write_text("\n".join(lines))
+    cfg = {
+        "format": "fabric",
+        "source": {"type": "file", "path": str(src)},
+        "target": {"type": "parquet", "base": str(tmp_path / "tables")},
+        "checkpoint": str(tmp_path / "ckpt"),
+        "dedup": False,
+        "shard_time": "2024-01-02 00:00:00",
+        "now": "2024-01-01",
+    }
+    [q] = app.start(spark, cfg)
+    with pytest.raises(pyspark.errors.exceptions.captured
+                       .StreamingQueryException, match="kill-switch"):
+        q.awaitTermination(120)
+    assert q.stats.records == {("p", "ev"): 30}
+    assert q.error_monitor.should_kill()

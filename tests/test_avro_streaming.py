@@ -480,3 +480,68 @@ def test_avro_historical_spool_idempotent_across_epoch_replay(
 
     run(None)                              # replay of the epoch
     assert spark.read.parquet(str(hist_dir)).count() == 1  # not twice
+
+
+def _write_parquet_bursts(dirpath, bursts):
+    """One parquet file of raw frames per burst, mtimes increasing so
+    ``maxFilesPerTrigger=1`` reads one burst per epoch; an empty burst
+    is a zero-row file, i.e. an epoch with no rows."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    dirpath.mkdir(parents=True, exist_ok=True)
+    for i, frames in enumerate(bursts):
+        f = dirpath / f"b{i:02d}.parquet"
+        pq.write_table(pa.table({"value": pa.array(frames, pa.binary())}),
+                       f)
+        os.utime(f, (1_000_000 + i, 1_000_000 + i))
+
+
+def test_avro_epoch_jobs_do_not_grow_with_collections(spark, tmp_path,
+                                                      epoch_jobs):
+    """The Avro twin of the JSON job budget: with manifested commits,
+    the raw-frame spool, dedup and the counters on, an epoch with no
+    rows runs exactly one job, and 5 collections cost at most 3 jobs
+    more than 2 (one manifest write each)."""
+    from rakam_api_collector_spark.streaming.committer import (
+        ErrorRateMonitor, IngestStats)
+
+    cat = Catalog(str(tmp_path / "catalog.json"))
+    fields = None
+    for c in range(5):
+        fields = cat.create_table("p1", f"t{c}", EXTRA)
+
+    def burst(n_collections, per=3):
+        return [_frame(fields, f"u{c}-{i}", f"2020-06-01T10:{c:02d}:{i:02d}",
+                       float(i), collection=f"t{c}")
+                for c in range(n_collections) for i in range(per)]
+
+    def run(name, bursts):
+        src = tmp_path / f"src_{name}"
+        _write_parquet_bursts(src, bursts)
+        stats = IngestStats()
+        epoch_jobs.clear()
+        q = start_avro_ingest_stream(
+            spark, None, cat, str(tmp_path / f"tables_{name}"),
+            checkpoint=str(tmp_path / f"ckpt_{name}"), project="p1",
+            historical_dir=str(tmp_path / f"hist_{name}"),
+            now=NOW, shard_time=SHARD_T, dedup=True, manifested=True,
+            stats=stats, error_monitor=ErrorRateMonitor(),
+            source_stream=spark.readStream.schema("value binary")
+            .option("maxFilesPerTrigger", 1).parquet(str(src)))
+        assert q.awaitTermination(120)
+        assert stats.total_records() == sum(len(b) for b in bursts)
+        rows = {p["batchId"]: p["numInputRows"] for p in q.recentProgress}
+        return dict(epoch_jobs), rows
+
+    jobs2, rows2 = run("two", [burst(2), []])
+    jobs5, rows5 = run("five", [burst(5)])
+
+    empty = [e for e, n in rows2.items() if n == 0]
+    assert empty, f"no empty epoch ran: {rows2}"
+    assert all(jobs2[e] == 1 for e in empty), (jobs2, rows2)
+    data2 = next(jobs2[e] for e, n in rows2.items() if n == 6)
+    data5 = next(jobs5[e] for e, n in rows5.items() if n == 15)
+    assert data5 - data2 <= 3, (jobs2, jobs5)

@@ -2322,3 +2322,44 @@ def test_reclone_refreshes_marker_version_and_mtime(spark, tmp_path):
     with open(marker) as f:
         assert _json.load(f)["source_version"] == 2
     assert src.registered_clones() == [cl2.table_dir]
+
+
+def test_footer_rows_exact_with_zero_row_file(spark, tmp_path):
+    """The footer walk sums every file's num_rows — a zero-row file
+    adds 0 and stays out of the scan list — so a batch's row count
+    needs no Spark job; a write of an empty frame commits rows=0."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = tmp_path / "batch" / "_day=2024-03-01"
+    d.mkdir(parents=True)
+    pq.write_table(pa.table({"id": [1, 2, 3]}), d / "part-0.parquet")
+    pq.write_table(pa.table({"id": pa.array([], pa.int64())}),
+                   d / "part-1.parquet")
+    stats, files, rows = manifest_mod._footer_stats(
+        str(tmp_path / "batch"), "parquet")
+    assert rows == 3
+    assert [f["path"] for f in files] == ["_day=2024-03-01/part-0.parquet"]
+    assert stats == {"id": [1, 3]}
+    assert manifest_mod._footer_stats(str(tmp_path / "missing"),
+                                      "parquet") == (None, None, None)
+
+    t = ManifestedTable(str(tmp_path), "proj", "events")
+    t.write(_df(spark, []).repartition(3), batch_id="empty",
+            partition_by_day=False)
+    t.write(_df(spark, range(7)).repartition(3), batch_id="full")
+    assert {m["batch"]: m["rows"] for m in t.committed()} == \
+        {"empty": 0, "full": 7}
+    assert t.last_entry["batch"] == "full"
+    assert t.read(spark).count() == 7
+
+
+def test_orc_entry_rows_exact(spark, tmp_path):
+    """ORC has no footer walk: its entry rows still come out exact
+    (from a Spark count over the written files)."""
+    t = ManifestedTable(str(tmp_path), "proj", "events")
+    df = _df(spark, range(4)).union(_df(spark, range(4, 9),
+                                        day="2024-03-02T10:00:00"))
+    t.write(df.repartition(4), batch_id="o1", fmt="orc")
+    assert t.last_entry["rows"] == 9
+    assert [m["rows"] for m in t.committed()] == [9]

@@ -462,3 +462,148 @@ def test_stream_handoff_replay_pins_classification_clock(spark, tmp_path):
 
     run(None)                              # replay of the epoch
     assert spark.read.text(hist_dir).count() == 1
+
+
+# --- per-epoch Spark job budget ----------------------------------------------
+
+def _write_bursts(src: Path, bursts: list[list[str]]) -> None:
+    """One file per burst, mtimes increasing so ``maxFilesPerTrigger=1``
+    reads them in order (one epoch each); an empty burst is an empty
+    file, i.e. an epoch with no rows."""
+    import os
+
+    src.mkdir(parents=True, exist_ok=True)
+    for i, lines in enumerate(bursts):
+        f = src / f"b{i:02d}.json"
+        f.write_text("".join(ln + "\n" for ln in lines))
+        os.utime(f, (1_000_000 + i, 1_000_000 + i))
+
+
+def _burst(n_collections: int, per: int = 3, tag: str = "") -> list[str]:
+    return [fabric(f"c{c}", {"_time": f"2020-06-01T10:{c:02d}:{i:02d}",
+                             "_user": f"{tag}u{c}-{i}", "v": i})
+            for c in range(n_collections) for i in range(per)]
+
+
+def _rows_by_epoch(q) -> dict[int, int]:
+    return {p["batchId"]: p["numInputRows"] for p in q.recentProgress}
+
+
+def test_stream_epoch_jobs_do_not_grow_with_collections(spark, tmp_path,
+                                                        epoch_jobs):
+    """With manifested commits, a K3 channel, dedup and the A2/ST11
+    counters on: an epoch with no rows runs exactly one Spark job (the
+    count that commits the dedup state), and a data epoch grows by at
+    most one job per extra collection (its manifest write) — the
+    counters read the rows each commit wrote instead of counting."""
+    from rakam_api_collector_spark.streaming.committer import (
+        ErrorRateMonitor, IngestStats)
+
+    def run(name, bursts):
+        src = tmp_path / f"src_{name}"
+        _write_bursts(src, bursts)
+        stats = IngestStats()
+        epoch_jobs.clear()
+        q = start_ingest_stream(
+            spark, str(src), "fabric", Catalog(),
+            table_base=str(tmp_path / f"tables_{name}"),
+            checkpoint=str(tmp_path / f"ckpt_{name}"),
+            historical_dir=str(tmp_path / f"hist_{name}"),
+            now=NOW, shard_time=SHARD_T, dedup=True, manifested=True,
+            stats=stats, error_monitor=ErrorRateMonitor(),
+            max_files_per_trigger=1)
+        assert q.awaitTermination(120)
+        assert stats.total_records() == sum(len(b) for b in bursts)
+        return dict(epoch_jobs), _rows_by_epoch(q)
+
+    jobs2, rows2 = run("two", [_burst(2), []])
+    jobs5, rows5 = run("five", [_burst(5)])
+
+    empty = [e for e, n in rows2.items() if n == 0]
+    assert empty, f"no empty epoch ran: {rows2}"
+    assert all(jobs2[e] == 1 for e in empty), (jobs2, rows2)
+    data2 = next(jobs2[e] for e, n in rows2.items() if n == 6)
+    data5 = next(jobs5[e] for e, n in rows5.items() if n == 15)
+    assert data5 - data2 <= 3, (jobs2, jobs5)
+
+
+def test_stream_maintenance_ticks_on_empty_epochs(spark, tmp_path):
+    """The hook's cadence counts epoch ids, so empty epochs still tick
+    it: every_epochs=3 sweeps on epochs 2 and 5 although both are
+    empty, and the sweeps keep every committed row readable."""
+    from rakam_api_collector_spark.manifest import ManifestedTable
+
+    src = tmp_path / "src"
+    bursts = [_burst(1, tag="a"), _burst(1, tag="b"), [],
+              _burst(1, tag="c"), _burst(1, tag="d"), []]
+    _write_bursts(src, bursts)
+    q = start_ingest_stream(
+        spark, str(src), "fabric", Catalog(),
+        table_base=str(tmp_path / "tables"),
+        checkpoint=str(tmp_path / "ckpt"),
+        now=NOW, shard_time=SHARD_T, dedup=False, manifested=True,
+        maintenance={"every_epochs": 3, "inline": True, "min_batches": 2},
+        max_files_per_trigger=1)
+    assert q.awaitTermination(120)
+
+    rows = _rows_by_epoch(q)
+    assert rows[2] == 0 and rows[5] == 0, rows
+    reports = q.maintenance.reports
+    assert [r["epoch"] for r in reports] == [2, 5]
+    assert not [r for r in reports if "error" in r]
+    got = ManifestedTable(str(tmp_path / "tables"), "testproject", "c0") \
+        .read(spark)
+    assert got.count() == sum(len(b) for b in bursts)
+
+
+def test_stream_counters_with_check_constraint(spark, tmp_path):
+    """A CHECK constraint makes the manifest write localCheckpoint the
+    frame first; the counters read the committed entry's rows, so they
+    are exact and nothing waits on an Observation that a checkpoint job
+    would never report."""
+    from rakam_api_collector_spark.manifest import ManifestedTable
+    from rakam_api_collector_spark.streaming.committer import (
+        ErrorRateMonitor, IngestStats)
+
+    base = str(tmp_path / "tables")
+    table = ManifestedTable(base, "testproject", "c0")
+    table.add_constraint("v_nonneg", "v >= 0")
+    src = tmp_path / "src"
+    _write_lines(src, _burst(2))
+    stats, mon = IngestStats(), ErrorRateMonitor()
+    q = start_ingest_stream(
+        spark, str(src), "fabric", Catalog(), table_base=base,
+        checkpoint=str(tmp_path / "ckpt"),
+        now=NOW, shard_time=SHARD_T, dedup=False, manifested=True,
+        stats=stats, error_monitor=mon)
+    assert q.awaitTermination(120)
+    assert q.exception() is None
+    assert stats.records == {("testproject", "c0"): 3,
+                             ("testproject", "c1"): 3}
+    assert sum(e[1] for e in mon._events) == 6
+    assert sum(e[2] for e in mon._events) == 0
+    assert table.read(spark).count() == 3
+
+
+def test_stream_counters_plain_and_grouped(spark, tmp_path):
+    """Plain and grouped commits count through Observations riding the
+    writes: exact per-collection rows, and malformed envelopes (dropped
+    by the parser) count as failures."""
+    from rakam_api_collector_spark.streaming.committer import (
+        ErrorRateMonitor, IngestStats)
+
+    for layout in ("per-table", "grouped"):
+        src = tmp_path / f"src_{layout}"
+        _write_lines(src, _burst(3, per=2) + ['{"data": {broken'])
+        stats, mon = IngestStats(), ErrorRateMonitor()
+        q = start_ingest_stream(
+            spark, str(src), "fabric", Catalog(),
+            table_base=str(tmp_path / f"tables_{layout}"),
+            checkpoint=str(tmp_path / f"ckpt_{layout}"),
+            now=NOW, shard_time=SHARD_T, dedup=False, layout=layout,
+            stats=stats, error_monitor=mon)
+        assert q.awaitTermination(120)
+        assert stats.records == {("testproject", f"c{c}"): 2
+                                 for c in range(3)}, layout
+        assert (sum(e[1] for e in mon._events),
+                sum(e[2] for e in mon._events)) == (6, 1), layout
