@@ -216,7 +216,7 @@ def dsir_select(spark: SparkSession, raw: DataFrame,
     (corpora, n, buckets, alpha, seed, temperature) on any engine —
     the md5-based hashing and noise are pure functions of the data.
 
-    Cost shape (measured, scripts/scaling_study.py dsir_select): the
+    Cost shape (measured, STRESS.md operator scaling study): the
     raw corpus has three consumers — the raw LM fit, the
     per-occurrence weight sum, and the ids-only frame — each
     linear-or-better in isolation (×2.1-3.7 wall over ×4 data at

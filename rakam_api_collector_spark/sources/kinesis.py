@@ -118,12 +118,10 @@ def _err_code(e: Exception) -> str:
 
 def default_stop_slack_ms(window_ms: int) -> int:
     """Default ``stopSlackMs`` for a partitioned-mode window read: the
-    window length clamped to [1 s, 5 s]. Single source of truth —
-    the reader (read()) and the amplification STRESS cell
-    (scripts/stress_kinesis_slack.py) both derive from it, so the
-    cell's documented bound ``1 + slack/window`` can never silently
-    diverge from the reader's actual behavior. Rationale at the read()
-    call site: slack covers approximately-monotone arrival-stamp
+    window length clamped to [1 s, 5 s]. Single source of truth for
+    the reader (read()), whose re-read amplification STRESS.md measured
+    against the documented bound ``1 + slack/window``. Rationale at the
+    read() call site: slack covers approximately-monotone arrival-stamp
     jitter; the clamp bounds re-read amplification at 2× for ≥1 s
     windows while keeping a full second of protection under
     sub-second windows."""

@@ -21,6 +21,37 @@ Spark Structured Streaming:
 - ST8 backpressure / ST9 retry / ST10 limiter → Spark-native (unified
   memory manager, task retries) — deliberately no custom code.
 
+One epoch body serves all four streams (JSON and Avro, realtime and
+historical drain): ``_start_epochs``, Structured Streaming's per-epoch
+``foreachBatch`` sink. Each starter supplies its streaming frame, whose
+``_label`` column classifies every row — ``"stream"`` (split, decoded),
+``"corrupt"`` (rejected: counted, spooled, never decoded) or anything
+else (Avro ``"bulk"`` pointers: decoded, never split) — plus its
+decoder, its ST11 failure rule and, on the realtime paths, its K3
+publish. The stages run in this order:
+
+1. materialize: the cached batch's one first action, a
+   ``groupBy(_label, day).count()`` histogram collected to the driver.
+   Being a full action it runs every partition (the dedup operator
+   commits its RocksDB state only where an action ran), and it yields
+   the batch size, the rejected count, the per-day counts the split
+   needs and the hot-row count ST11 needs; no later stage counts rows.
+2. empty-epoch skip: a 0-row epoch (the no-data batch that advances the
+   watermark) stops here, but the maintenance hook still ticks — its
+   cadence counts epoch ids.
+3. bad-row spool (``errors_dir``): rejected rows are dead-lettered
+   before the split, so they never reach the K3 spool.
+4. pinned clock, split and K3 publish: only ``"stream"`` rows are split;
+   the classification date is pinned to the epoch's first attempt and
+   the publish is epoch-marker idempotent (``_pinned_epoch_date`` /
+   ``_handoff_once``), so a replayed epoch sees the same partition and
+   never re-publishes — nor drops — a late record. The handoff runs
+   before the commit (BatchRecords.java:44-67). Without a K3 channel
+   late records stay hot.
+5. decode → ``_shard_time`` backfill → ``_commit_tables`` →
+   ``maint_hook.after_epoch`` → ``_account`` (A2 counters and the ST11
+   kill-switch, from the rows each commit wrote).
+
 The file source here stands in for Kafka: swap
 ``spark.readStream.format("kafka")…selectExpr("CAST(value AS STRING)")``
 for the text source and nothing downstream changes. (No Kafka broker or
@@ -30,8 +61,6 @@ the semantics exercised are source-independent.)
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -39,17 +68,24 @@ from rakam_api_collector_spark.ingest.batch import FORMATS, ingest_batch
 from rakam_api_collector_spark.ingest.catalog import Catalog
 from rakam_api_collector_spark.sinks import (write_collections,
                                              write_collections_grouped)
-from rakam_api_collector_spark.streaming.latesplit import split_late
+from rakam_api_collector_spark.streaming.latesplit import (realtime_days,
+                                                           split_late)
+
+DEDUP_TTL = "30 days"   # the reference's 1-month RocksDB TTL (ST6)
+TIME_FIELD = "_time"    # the envelope's event-time field
+_STREAM, _CORRUPT = "stream", "corrupt"     # ``_label`` values
 
 
-def _event_time_expr(fmt: str, time_field: str = "_time") -> Column:
+def _data_path(fmt: str, field: str) -> str:
+    root = FORMATS[fmt]["data"].removeprefix("$.")
+    return f"$.{root}.{field}" if root else f"$.{field}"
+
+
+def _event_time_expr(fmt: str) -> Column:
     """Partial-parse event time for watermarking/dedup (D4): only the
     time field is extracted pre-parse (KafkaDecoupleMessage.java:46-114)."""
-    cfg = FORMATS[fmt]
-    root = cfg["data"].removeprefix("$.")
-    raw = F.get_json_object("value", f"$.{root}.{time_field}" if root
-                            else f"$.{time_field}")
-    if cfg["numeric_timestamps"]:
+    raw = F.get_json_object("value", _data_path(fmt, TIME_FIELD))
+    if FORMATS[fmt]["numeric_timestamps"]:
         return (F.when(raw.rlike(r"^-?\d+$"),
                        F.timestamp_millis(raw.cast("long")))
                 .otherwise(raw.try_cast("timestamp")))
@@ -75,11 +111,21 @@ def _envelope_reject_predicate(fmt: str) -> Column:
                      "'map<string,variant>')").isNull())
 
 
+def _json_label(fmt: str, errors_dir: str | None) -> Column:
+    """JSON rows are rejected by the envelope predicate when a spool is
+    set; otherwise every row is split and decoded (the parser then
+    drops what it cannot route, and ST11 counts those drops)."""
+    if errors_dir is None:
+        return F.lit(_STREAM)
+    return F.when(_envelope_reject_predicate(fmt), _CORRUPT) \
+        .otherwise(_STREAM)
+
+
 def _spool_dead_letters(bad: DataFrame, errors_dir: str,
                         epoch_id: int, stream: str = "realtime") -> None:
-    """Write rejected envelope rows (string ``value``) as replayable
-    parquet under ``errors_dir/stream=<name>/epoch_id=<N>/`` with
-    overwrite.
+    """Write rejected rows (``value``: envelope string or binary frame)
+    as replayable parquet ``(value, n_bytes[, first_byte_hex])`` under
+    ``errors_dir/stream=<name>/epoch_id=<N>/`` with overwrite.
 
     foreachBatch offers at-least-once semantics: a retried micro-batch
     re-runs ``process`` with the SAME epoch_id, so keying the spool by
@@ -97,100 +143,91 @@ def _spool_dead_letters(bad: DataFrame, errors_dir: str,
     before pointing the partition-discovery reader at the dir.)"""
     if bad.isEmpty():
         return
-    (bad.select("value", F.octet_length("value").alias("n_bytes"))
-     .write.mode("overwrite")
+    cols = [F.col("value"), F.octet_length("value").alias("n_bytes")]
+    if dict(bad.dtypes)["value"] == "binary":     # Avro frame forensics
+        cols.append(F.hex(F.substring("value", 1, 1))
+                    .alias("first_byte_hex"))
+    (bad.select(*cols).write.mode("overwrite")
      .parquet(f"{errors_dir}/stream={stream}/epoch_id={epoch_id}"))
 
 
-def _spool_corrupt_frames(batch: DataFrame, errors_dir: str,
-                          epoch_id: int, stream: str = "realtime") -> None:
-    """Write ``_kind=='corrupt'`` binary frames as replayable parquet
-    with cheap forensics columns — same stream/epoch keying, overwrite
-    idempotence, and empty-batch skip as ``_spool_dead_letters``."""
-    bad = batch.filter(F.col("_kind") == "corrupt")
-    if bad.isEmpty():
-        return
-    (bad.select("value",
-                F.octet_length("value").alias("n_bytes"),
-                F.hex(F.substring("value", 1, 1)).alias("first_byte_hex"))
-     .write.mode("overwrite")
-     .parquet(f"{errors_dir}/stream={stream}/epoch_id={epoch_id}"))
+def _stream_setup(spark: SparkSession, table_base: str, manifested: bool,
+                  maintenance: dict | None, state_partitions: int | None,
+                  dedup: bool):
+    """Session and sink setup shared by the realtime paths; returns the
+    maintenance hook (or None).
 
+    ``maintenance`` is a manifest.MaintenanceHook kwargs dict — the
+    every-N-epochs shard-organizer sweep — rejected on non-manifested
+    sinks, whose plain append layout has no version protocol to compact.
 
-def _enable_rocksdb_state(spark: SparkSession) -> None:
-    """RocksDB state store + changelog checkpointing, shared by both
-    realtime paths (ST6). Changelog checkpointing makes the per-batch
-    state COMMIT persist only that batch's change log and snapshot
-    asynchronously in the background — without it every state partition
-    checkpoints a full RocksDB snapshot per micro-batch. Measured A/B
-    at the reference stress shape (30k records/batch, 100 collections,
-    local[32]): summed commitTimeMs per batch drops ~2× (14-18 s → 4-9
-    s across 32 state partitions); local wall is unchanged because the
-    commits overlap cores, but at cluster scale the snapshot uploads
-    land on the checkpoint object store, where the changelog's
-    proportional-to-batch cost (vs proportional-to-state-size) is the
-    difference that keeps a 1-month TTL key space inside a 15 s
-    trigger."""
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider")
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb."
-        "changelogCheckpointing.enabled", "true")
+    ``state_partitions`` pins the stateful operator's partition count
+    (ST6 sizing). Structured Streaming fixes it to
+    ``spark.sql.shuffle.partitions`` at the FIRST micro-batch and records
+    it in the checkpoint, and AQE never re-plans stateful exchanges, so
+    an oversized count pays per-partition RocksDB open/commit/changelog
+    overhead every trigger. Sizing rule: partitions ≈ keys-per-batch / a
+    few thousand, capped by executor count. Measured at the reference
+    stress shape (30k keys/batch, 100 collections, local[32], loadavg
+    ~22): 32 partitions → 25-26 s steady batch wall; 8 → 15-16 s; 4 →
+    13-15 s (STRESS.md). The conf is session-scoped: the streaming app
+    owns its session (app.start).
 
-
-def _set_state_partitions(spark: SparkSession,
-                          state_partitions: int | None) -> None:
-    """Pin the streaming query's state-partition count (ST6 sizing).
-
-    Structured Streaming fixes the stateful operator's partition count
-    to ``spark.sql.shuffle.partitions`` AT THE FIRST MICRO-BATCH and
-    records it in the checkpoint — so the knob must be set before the
-    query plans its first batch, and a restarted query keeps its
-    recorded value regardless of session conf. AQE never re-plans
-    stateful exchanges (it is disabled for stateful workloads), so
-    unlike the batch side there is no runtime coalescing to fall back
-    on: an oversized count pays per-partition RocksDB open/commit/
-    changelog overhead every trigger with no offsetting parallelism.
-
-    Sizing rule: partitions ≈ keys-per-batch / a-few-thousand, capped
-    by executor count. Measured A/B at the reference stress shape
-    (30k keys/batch, 100 collections, local[32], loadavg ~22 box): 32
-    state partitions → 25-26 s steady batch wall; 8 → 15-16 s; 4 →
-    13-15 s (JSON steady max 14.8 s, Avro 13.1 s — both under the
-    reference's 15 s trigger budget; STRESS.md) — the per-RocksDB-
-    instance commit overhead dominated at ~1k keys per partition. At
-    cluster scale with 100× key volume, raise it proportionally (the
-    same rule, not the same number).
-
-    Session-scoped by design: the conf applies to every query the
-    session starts afterwards — the streaming app owns its session
-    (app.start), and the batch side's post-shuffle parallelism is
-    governed by AQE's advisory size, not this value."""
+    ``dedup`` turns on the RocksDB state store with changelog
+    checkpointing — ST6 parity, the reference's dedup store IS RocksDB
+    (TtlDB, Deduplicator.java:26-46): state lives off-heap and each
+    batch's state commit persists only its change log, snapshotting in
+    the background (summed commitTimeMs per batch ~2× lower at the
+    stress shape; what keeps a 1-month TTL key space inside a 15 s
+    trigger once snapshots land on an object store)."""
+    hook = None
+    if maintenance is not None:
+        if not manifested:
+            raise ValueError("maintenance scheduling requires "
+                             "manifested=True (the sweep compacts "
+                             "version-committed tables)")
+        from rakam_api_collector_spark.manifest import MaintenanceHook
+        hook = MaintenanceHook(spark, table_base, **maintenance)
     if state_partitions is not None:
         if state_partitions < 1:
             raise ValueError(f"state_partitions must be >= 1, "
                              f"got {state_partitions}")
         spark.conf.set("spark.sql.shuffle.partitions",
                        str(state_partitions))
+    if dedup:
+        spark.conf.set(
+            "spark.sql.streaming.stateStore.providerClass",
+            "org.apache.spark.sql.execution.streaming.state."
+            "RocksDBStateStoreProvider")
+        spark.conf.set(
+            "spark.sql.streaming.stateStore.rocksdb."
+            "changelogCheckpointing.enabled", "true")
+    return hook
 
 
-def _maintenance_hook(spark: SparkSession, table_base: str,
-                      manifested: bool, maintenance: dict | None):
-    """Build the every-N-epochs shard-organizer hook (manifest.
-    MaintenanceHook) for a manifested stream; ``maintenance`` is the
-    hook's kwargs dict. Rejected on non-manifested sinks — the plain
-    append layout has no version protocol to compact."""
-    if maintenance is None:
-        return None
-    if not manifested:
-        raise ValueError("maintenance scheduling requires "
-                         "manifested=True (the sweep compacts "
-                         "version-committed tables)")
-    from rakam_api_collector_spark.manifest import MaintenanceHook
+def _dedup(stream: DataFrame, user: Column, time_key: Column) -> DataFrame:
+    """ST6: drop repeats of the (_user, _time) key within the TTL
+    watermark (Deduplicator.java:26-88). A null key part gets a unique
+    surrogate, so such records are never deduped
+    (AvroDuplicateHandler.java:93-97)."""
+    def key(c: Column, tag: str) -> Column:
+        return F.coalesce(c, F.concat(F.lit(f"\0null{tag}\0"),
+                                      F.expr("uuid()")))
 
-    return MaintenanceHook(spark, table_base, **maintenance)
+    return (stream.withColumn("_dk_user", key(user, "user"))
+            .withColumn("_dk_time", key(time_key.cast("string"), "time"))
+            .withWatermark("_event_time", DEDUP_TTL)
+            .dropDuplicatesWithinWatermark(["_dk_user", "_dk_time"]))
+
+
+def _check_layout(layout: str, manifested: bool) -> None:
+    if layout not in ("per-table", "grouped"):
+        raise ValueError(f"unknown layout {layout!r}: "
+                         "expected 'per-table' or 'grouped'")
+    if layout == "grouped" and manifested:
+        raise ValueError("layout='grouped' and manifested=True are "
+                         "incompatible — the manifest commit protocol "
+                         "is per-collection")
 
 
 _EPOCH_FILE_RETAIN = 128
@@ -289,15 +326,14 @@ def _pinned_epoch_date(spark: SparkSession, checkpoint: str,
 def _commit_tables(tables, table_base: str, manifested: bool,
                    checkpoint: str, epoch_id: int,
                    layout: str = "per-table") -> dict[tuple[str, str], int]:
-    """Per-micro-batch table commit, shared by the realtime paths and
-    the historical drains. Plain mode appends via write_collections;
-    manifested mode commits each collection through the version-file
-    protocol with a (checkpoint-namespace, epoch) idempotency key — a
-    replayed foreachBatch from the SAME checkpoint replaces its batch,
-    while a fresh checkpoint (new incarnation, or the drain's own
-    checkpoint) or a second query appends. Per-collection commits
-    overlap from a thread pool either way (manifest.py;
-    RaptorDatabaseHandler.java:312-339).
+    """Per-micro-batch table commit. Plain mode appends via
+    write_collections; manifested mode commits each collection through
+    the version-file protocol with a (checkpoint-namespace, epoch)
+    idempotency key — a replayed foreachBatch from the SAME checkpoint
+    replaces its batch, while a fresh checkpoint (new incarnation, or
+    the drain's own checkpoint) or a second query appends.
+    Per-collection commits overlap from a thread pool either way
+    (manifest.py; RaptorDatabaseHandler.java:312-339).
 
     ``layout="grouped"`` commits ONE write job per (project,
     schema-group) via ``write_collections_grouped`` (Hive-style
@@ -305,9 +341,8 @@ def _commit_tables(tables, table_base: str, manifested: bool,
     — at the reference's 100-collections-per-batch stress shape the
     steady-state micro-batch wall is commit-fan-out-bound, and this is
     the sink whose job count scales with #schemas, not #collections.
-    Requires a result carrying ``.groups`` (the JSON ingest path);
-    incompatible with ``manifested`` (the manifest protocol is
-    per-collection by design).
+    Requires a result carrying ``.groups`` (the JSON ingest path); the
+    starters refuse it with ``manifested`` (``_check_layout``).
 
     Returns ``{(project, collection): rows written}``, read from what
     the commit wrote rather than counted again: the manifest entry's
@@ -315,11 +350,7 @@ def _commit_tables(tables, table_base: str, manifested: bool,
     each write in the plain and grouped modes. The A2/ST11 counters
     (``_account``) read it, so they cost no per-collection job."""
     if layout == "grouped":
-        if manifested:
-            raise ValueError("layout='grouped' and manifested=True are "
-                             "incompatible — the manifest commit "
-                             "protocol is per-collection")
-        if len(tables) == 0:        # empty micro-batch: nothing to commit
+        if len(tables) == 0:        # nothing hot to commit
             return {}
         if not getattr(tables, "groups", None):
             raise ValueError("layout='grouped' needs an IngestResult "
@@ -366,9 +397,83 @@ def _account(committed: dict[tuple[str, str], int], failed: int,
                 "threshold within its window")
 
 
-def _expose(query, maint_hook=None, stats=None, error_monitor=None):
-    """Hang the stream's maintenance hook and counters on the returned
-    query, the surface operators and tests read."""
+def _start_epochs(spark: SparkSession, stream: DataFrame, checkpoint: str,
+                  trigger: dict | None, decode, *, count_drops: bool,
+                  table_base: str, manifested: bool,
+                  layout: str = "per-table", shard_time=None, publish=None,
+                  now=None, outdated_day_index: int = 1, meta_store=None,
+                  errors_dir: str | None = None, name: str = "realtime",
+                  maint_hook=None, stats=None, error_monitor=None):
+    """Start ``stream`` (``value``, ``_label`` and, with ``publish``,
+    ``_event_time``) through the epoch stages in the module docstring;
+    returns the StreamingQuery with ``maintenance``, ``stats`` and
+    ``error_monitor`` attached.
+
+    ``decode(hot)`` returns the epoch's ``{(project, collection): df}``
+    with an ``unpersist()``; ``publish(late)`` is the K3 channel, given
+    the late rows' ``value``. ST11 fails the rejected rows, plus — with
+    ``count_drops`` — the hot rows the decoder did not commit (JSON: the
+    parser drops what it cannot route; an Avro bulk pointer expands to
+    many rows, so there only corrupt frames count)."""
+    label = F.col("_label")
+
+    def process(batch: DataFrame, epoch_id: int) -> None:
+        batch = batch.cache()
+        tables = None
+        try:
+            # 1. materialize: the one first action, a histogram
+            day = F.to_date("_event_time") if publish is not None \
+                else F.lit(None)
+            hist = batch.groupBy(label, day).count().collect()
+            if not hist:                    # 2. empty epoch
+                if maint_hook is not None:
+                    maint_hook.after_epoch(epoch_id)
+                return
+            n_bad = sum(n for lab, _, n in hist if lab == _CORRUPT)
+            n_hot = sum(n for lab, _, n in hist if lab != _CORRUPT)
+            if errors_dir is not None and n_bad:    # 3. bad-row spool
+                _spool_dead_letters(
+                    batch.filter(label == _CORRUPT).select("value"),
+                    errors_dir, epoch_id, name)
+            hot = batch.filter(label != _CORRUPT)
+            if publish is not None:         # 4. pinned clock, split, K3
+                meta = _ckpt_meta(checkpoint, meta_store)
+                today = now if now is not None else \
+                    _pinned_epoch_date(spark, checkpoint, epoch_id, meta)
+                days = {d: n for lab, d, n in hist if lab == _STREAM}
+                rt, late = split_late(
+                    batch.filter(label == _STREAM), time_col="_event_time",
+                    outdated_day_index=outdated_day_index, now=today,
+                    day_counts=days)
+                _handoff_once(checkpoint, epoch_id,
+                              lambda: publish(late.select("value")), meta)
+                kept = set(realtime_days(days, today, outdated_day_index))
+                n_hot -= sum(n for d, n in days.items() if d not in kept)
+                if any(lab not in (_STREAM, _CORRUPT) for lab, _, _ in hist):
+                    # unsplit rows (Avro bulk pointers) stay hot
+                    rt = rt.unionByName(hot.filter(label != _STREAM))
+                hot = rt
+            tables = decode(hot)            # 5. decode → commit → account
+            out = tables
+            if shard_time is not None:
+                out = {k: df.withColumn("_shard_time", F.coalesce(
+                    "_shard_time", F.lit(shard_time).cast("timestamp")))
+                    for k, df in tables.items()}
+            committed = _commit_tables(out, table_base, manifested,
+                                       checkpoint, epoch_id, layout=layout)
+            if maint_hook is not None:
+                maint_hook.after_epoch(epoch_id)
+            failed = n_bad + (max(n_hot - sum(committed.values()), 0)
+                              if count_drops else 0)
+            _account(committed, failed, stats, error_monitor)
+        finally:
+            if tables is not None:
+                tables.unpersist()
+            batch.unpersist()
+
+    query = (stream.writeStream.foreachBatch(process)
+             .option("checkpointLocation", checkpoint)
+             .trigger(**(trigger or {"availableNow": True})).start())
     query.maintenance = maint_hook
     query.stats = stats
     query.error_monitor = error_monitor
@@ -379,15 +484,12 @@ def start_ingest_stream(spark: SparkSession, source_dir: str, fmt: str,
                         catalog: Catalog, table_base: str, checkpoint: str,
                         historical_dir: str | None = None,
                         dedup: bool = True,
-                        dedup_ttl: str = "30 days",
                         outdated_day_index: int = 1,
                         now=None,
                         trigger: dict | None = None,
-                        time_field: str = "_time",
                         shard_time=None,
                         max_files_per_trigger: int | None = None,
                         stats=None, error_monitor=None,
-                        rocksdb_state: bool = True,
                         source_stream: DataFrame | None = None,
                         historical_producer=None,
                         errors_dir: str | None = None,
@@ -398,13 +500,6 @@ def start_ingest_stream(spark: SparkSession, source_dir: str, fmt: str,
                         meta_store=None):
     """Start the real-time ingestion query over a source of envelope JSON
     lines. Returns the StreamingQuery.
-
-    ``meta_store`` routes the K3 per-epoch bookkeeping (handoff
-    markers, pinned clocks — files kept UNDER THE CHECKPOINT) through
-    the manifest MetadataStore seam, so an object-store checkpoint
-    keeps its markers durable beside the offsets (r16,
-    ``_ckpt_meta``). Default POSIX; only consulted when a K3 channel
-    is configured.
 
     The default source is a text-file directory (``source_dir``); pass
     ``source_stream`` (any streaming DataFrame with a ``value`` column —
@@ -422,8 +517,8 @@ def start_ingest_stream(spark: SparkSession, source_dir: str, fmt: str,
     ``sources.kafka.historical_producer_for``) or ``historical_dir``
     (a text spool directory). Passing both raises: a silent
     precedence would leave the un-chosen channel forever empty while
-    downstream tooling watches it. With neither, late records stay on
-    the hot path (the batch-parity posture tests rely on).
+    downstream tooling watches it. ``meta_store`` routes the K3
+    bookkeeping kept under the checkpoint (``_ckpt_meta``).
 
     ``errors_dir`` adds a dead-letter spool beyond the reference's
     drop-and-count: envelopes the router/parser would reject (missing
@@ -438,10 +533,8 @@ def start_ingest_stream(spark: SparkSession, source_dir: str, fmt: str,
     ``ManifestedTable(...).read(spark)``. ``maintenance`` (manifested
     only) schedules the shard-organizer sweep the reference runs as a
     daemon: a :class:`manifest.MaintenanceHook` kwargs dict (e.g.
-    ``{"every_epochs": 16, "min_batches": 8}``) compacts + gc's the
-    manifested tables every N committed epochs, so the live batch
-    count per collection stays bounded on a long-running stream. The
-    hook is exposed as ``query.maintenance`` for observability.
+    ``{"every_epochs": 16, "min_batches": 8}``), exposed as
+    ``query.maintenance``.
 
     ``layout="grouped"`` commits one write job per (project,
     schema-group) instead of one per collection (see ``_commit_tables``
@@ -450,33 +543,15 @@ def start_ingest_stream(spark: SparkSession, source_dir: str, fmt: str,
     many-small-collections streams (the reference stress shape).
 
     ``stats`` (``committer.IngestStats``, A2) and ``error_monitor``
-    (``committer.ErrorRateMonitor``, ST11) read the rows each commit
-    wrote, so they cost no per-collection job; with a K3 channel the
-    monitor's failure count needs one count of the split's hot rows.
-    Both are exposed on the query as ``query.stats`` /
-    ``query.error_monitor``.
-    """
-    if layout not in ("per-table", "grouped"):
-        raise ValueError(f"unknown layout {layout!r}: "
-                         "expected 'per-table' or 'grouped'")
+    (``committer.ErrorRateMonitor``, ST11) are exposed on the query as
+    ``query.stats`` / ``query.error_monitor``."""
+    _check_layout(layout, manifested)
     if historical_producer is not None and historical_dir is not None:
         raise ValueError(
             "pass historical_producer OR historical_dir, not both — "
             "late records hand off to exactly one K3 channel")
-    if layout == "grouped" and manifested:
-        raise ValueError("layout='grouped' and manifested=True are "
-                         "incompatible — the manifest commit protocol "
-                         "is per-collection")
-    maint_hook = _maintenance_hook(spark, table_base, manifested,
-                                   maintenance)
-    _set_state_partitions(spark, state_partitions)
-    if dedup and rocksdb_state:
-        # ST6 parity: the reference's dedup store IS RocksDB (TtlDB,
-        # Deduplicator.java:26-46); Spark's RocksDB state store keeps
-        # dedup state off-heap and incrementally checkpointed, which is
-        # what makes a 1-month TTL key space viable on executors.
-        _enable_rocksdb_state(spark)
-
+    maint_hook = _stream_setup(spark, table_base, manifested, maintenance,
+                               state_partitions, dedup)
     if source_stream is not None:
         raw = source_stream.select(
             F.col("value").cast("string").alias("value"))
@@ -487,122 +562,28 @@ def start_ingest_stream(spark: SparkSession, source_dir: str, fmt: str,
                                    max_files_per_trigger)
         raw = reader.load(source_dir)
 
-    stream = raw.withColumn("_event_time", _event_time_expr(fmt, time_field))
+    stream = raw.withColumn("_event_time", _event_time_expr(fmt))
     if dedup:
-        # ST6: key = (_user, _time) (Deduplicator.java:26-88); records with
-        # a null key are never deduped (AvroDuplicateHandler.java:93-97) —
-        # a unique surrogate keeps them distinct.
-        cfg = FORMATS[fmt]
-        root = cfg["data"].removeprefix("$.")
-        user = F.get_json_object(
-            "value", f"$.{root}._user" if root else "$._user")
-        stream = (stream
-                  .withColumn("_dk_user", F.coalesce(
-                      user, F.concat(F.lit("\0nulluser\0"), F.expr("uuid()"))))
-                  .withColumn("_dk_time", F.coalesce(
-                      F.col("_event_time").cast("string"),
-                      F.concat(F.lit("\0nulltime\0"), F.expr("uuid()"))))
-                  .withWatermark("_event_time", dedup_ttl)
-                  .dropDuplicatesWithinWatermark(["_dk_user", "_dk_time"]))
+        stream = _dedup(stream,
+                        F.get_json_object("value", _data_path(fmt, "_user")),
+                        F.col("_event_time"))
+    publish = historical_producer
+    if historical_dir is not None:
+        def publish(late: DataFrame) -> None:
+            late.write.mode("append").text(historical_dir)
 
-    def process(batch: DataFrame, epoch_id: int) -> None:
-        batch = batch.select("value", "_event_time").cache()
-        tables = None
-        try:
-            # ONE full action first. It materializes the cache, and it
-            # executes every partition — the dedup operator commits its
-            # RocksDB state only in partitions an action ran (isEmpty's
-            # executeTake may stop early). Dead letters are counted in
-            # the same job.
-            if errors_dir is not None:
-                bad = _envelope_reject_predicate(fmt)
-                n_batch, n_dead = batch.agg(F.count(F.lit(1)),
-                                            F.count_if(bad)).first()
-            else:
-                n_batch, n_dead = batch.count(), 0
-            if n_batch == 0:
-                # an empty epoch (Spark's no-data batch, run only to
-                # advance the watermark and evict state) has nothing
-                # to split, hand off, decode or commit; the hook still
-                # ticks, its cadence counts epoch ids
-                if maint_hook is not None:
-                    maint_hook.after_epoch(epoch_id)
-                return
-            if errors_dir is not None:
-                # dead-letter spool, on the PRE-SPLIT batch: malformed
-                # envelopes carry a null event time, so split_late would
-                # route them historical — spooling first keeps the
-                # per-micro-batch contract and lets the split below
-                # exclude them from the valid-late spool
-                if n_dead:
-                    _spool_dead_letters(batch.filter(bad), errors_dir,
-                                        epoch_id)
-                splittable = batch.filter(~bad)
-            else:
-                splittable = batch
-            k3 = historical_producer is not None or historical_dir is not None
-            if k3:
-                # K3 historical handoff — topic form (late envelopes
-                # re-published to the historical Kafka topic for the
-                # slow-cadence drain worker, KafkaHistoricalDataHandler
-                # .java:41-69) or spool form (text directory) — before
-                # the hot path commits, mirroring BatchRecords.java:
-                # 44-67's gating. The split's classification clock is
-                # pinned to the epoch's first attempt and the publish
-                # is epoch-marker idempotent (_pinned_epoch_date /
-                # _handoff_once): together a replayed epoch sees the
-                # identical realtime/historical partition and never
-                # re-publishes — nor drops — a late record.
-                meta = _ckpt_meta(checkpoint, meta_store)
-                eff_now = now if now is not None else \
-                    _pinned_epoch_date(spark, checkpoint, epoch_id,
-                                       meta)
-                rt, hist = split_late(splittable, time_col="_event_time",
-                                      outdated_day_index=outdated_day_index,
-                                      now=eff_now)
-                late = hist.select("value")
-
-                def _publish() -> None:
-                    if historical_producer is not None:
-                        historical_producer(late)
-                    else:
-                        late.write.mode("append").text(historical_dir)
-
-                _handoff_once(checkpoint, epoch_id, _publish, meta)
-                hot = rt
-            else:
-                # no K3 channel: late records stay on the hot path
-                # (the batch-parity posture tests rely on), and the
-                # split — whose re-promotion rule costs a count() job
-                # per micro-batch — is never planned at all
-                hot = splittable
-            tables = ingest_batch(spark, hot.select("value"), fmt, catalog,
-                                  shard_time=shard_time,
-                                  time_field=time_field)
-            committed = _commit_tables(tables, table_base, manifested,
-                                       checkpoint, epoch_id, layout=layout)
-            if maint_hook is not None:
-                maint_hook.after_epoch(epoch_id)
-            failed = 0
-            if error_monitor is not None:
-                # records the parser dropped are the hot rows that were
-                # not committed; only a K3 split makes the hot count
-                # unknown (one job). Dead-lettered rows never reach
-                # `hot`, so they are added back explicitly
-                n_in = hot.count() if k3 else n_batch - n_dead
-                failed = max(n_in - sum(committed.values()), 0) + n_dead
-            _account(committed, failed, stats, error_monitor)
-        finally:
-            if tables is not None:
-                tables.unpersist()
-            batch.unpersist()
-
-    writer = (stream.writeStream
-              .foreachBatch(process)
-              .option("checkpointLocation", checkpoint))
-    trig = trigger or {"availableNow": True}
-    return _expose(writer.trigger(**trig).start(), maint_hook, stats,
-                   error_monitor)
+    return _start_epochs(
+        spark, stream.select("value", "_event_time",
+                             _json_label(fmt, errors_dir).alias("_label")),
+        checkpoint, trigger,
+        lambda hot: ingest_batch(spark, hot.select("value"), fmt, catalog,
+                                 shard_time=shard_time,
+                                 time_field=TIME_FIELD),
+        count_drops=True, table_base=table_base, manifested=manifested,
+        layout=layout, publish=publish, now=now,
+        outdated_day_index=outdated_day_index, meta_store=meta_store,
+        errors_dir=errors_dir, maint_hook=maint_hook, stats=stats,
+        error_monitor=error_monitor)
 
 
 class AvroBatchResult(dict):
@@ -699,7 +680,6 @@ def start_avro_ingest_stream(spark: SparkSession, source_dir: str | None,
                              default_collection: str | None = None,
                              historical_dir: str | None = None,
                              dedup: bool = True,
-                             dedup_ttl: str = "30 days",
                              outdated_day_index: int = 1,
                              now=None,
                              trigger: dict | None = None,
@@ -707,7 +687,6 @@ def start_avro_ingest_stream(spark: SparkSession, source_dir: str | None,
                              bulk_base: str | None = None,
                              source_stream: DataFrame | None = None,
                              stats=None, error_monitor=None,
-                             rocksdb_state: bool = True,
                              errors_dir: str | None = None,
                              manifested: bool = False,
                              maintenance: dict | None = None,
@@ -716,9 +695,9 @@ def start_avro_ingest_stream(spark: SparkSession, source_dir: str | None,
     """Avro twin of ``start_ingest_stream`` — the reference's per-config
     deserializer selection (KafkaStreamSourceModule.java:26-60 binds
     AVRO vs JSON; KafkaAvroMessageTransformer.java:33-57 is the Avro
-    hot path). Identical lifecycle: partial-parse routing keys →
-    watermark + TTL dedup (ST6) → late split (ST3) with raw-frame spool
-    (K3) → per-collection typed decode → day-partitioned sinks (K1).
+    hot path): partial-parse routing keys → TTL dedup (ST6) → late split
+    (ST3) with a raw-frame parquet spool (K3, ``historical_dir``) →
+    per-collection typed decode → day-partitioned sinks (K1).
 
     The default source is a directory of framed binary records (one
     record per file, the binaryFile streaming source); pass
@@ -728,19 +707,16 @@ def start_avro_ingest_stream(spark: SparkSession, source_dir: str | None,
     schemas come from the catalog only (AvroUtil.java:30-73 derives
     writer schemas from the metastore, never the wire).
 
-    ``errors_dir`` adds a dead-letter spool beyond the reference's
-    drop-and-count (KafkaUtil.java:150-166): corrupt frames are written
-    per micro-batch as parquet rows (value, n_bytes, first_byte) so
-    poison pills can be replayed/diagnosed after a decoder fix instead
-    of being lost; counting (ST11) is unchanged."""
+    Deserialization failures are tagged ``_kind='corrupt'`` at routing
+    (``extract_stream_routing``), which is the exact ST11 failure count
+    (KafkaUtil.java:150-166). ``errors_dir`` spools them as parquet
+    (value, n_bytes, first_byte_hex) so poison pills can be replayed
+    after a decoder fix instead of being lost. Bulk pointers resolve on
+    the realtime path (AvroMessageEventTransformer.java:87-99)."""
     from rakam_api_collector_spark.ingest.avro import extract_stream_routing
 
-    maint_hook = _maintenance_hook(spark, table_base, manifested,
-                                   maintenance)
-    _set_state_partitions(spark, state_partitions)
-    if dedup and rocksdb_state:
-        _enable_rocksdb_state(spark)
-
+    maint_hook = _stream_setup(spark, table_base, manifested, maintenance,
+                               state_partitions, dedup)
     if source_stream is not None:
         raw = source_stream.select(F.col("value"))
     else:
@@ -752,106 +728,30 @@ def start_avro_ingest_stream(spark: SparkSession, source_dir: str | None,
                .format("binaryFile").load(source_dir)
                .select(F.col("content").alias("value")))
 
-    get_columns = catalog.get_columns
-    routed = extract_stream_routing(raw, get_columns, project,
+    routed = extract_stream_routing(raw, catalog.get_columns, project,
                                     default_collection=default_collection,
                                     source=source)
     stream = routed.withColumn("_event_time",
                                F.timestamp_millis("_time_ms"))
     if dedup:
-        # ST6 on the decoded (_user, _time) key; null keys get a unique
-        # surrogate and are never deduped (AvroDuplicateHandler.java:93-97)
-        stream = (stream
-                  .withColumn("_dk_user", F.coalesce(
-                      F.col("_user"),
-                      F.concat(F.lit("\0nulluser\0"), F.expr("uuid()"))))
-                  .withColumn("_dk_time", F.coalesce(
-                      F.col("_time_ms").cast("string"),
-                      F.concat(F.lit("\0nulltime\0"), F.expr("uuid()"))))
-                  .withWatermark("_event_time", dedup_ttl)
-                  .dropDuplicatesWithinWatermark(["_dk_user", "_dk_time"]))
+        stream = _dedup(stream, F.col("_user"), F.col("_time_ms"))
+    publish = None
+    if historical_dir is not None:
+        def publish(late: DataFrame) -> None:
+            late.write.mode("append").parquet(historical_dir)
 
-    def process(batch: DataFrame, epoch_id: int) -> None:
-        batch = (batch.select("_kind", "_collection", "value",
-                              "_event_time").cache())
-        tables = None
-        try:
-            # one full action first, as on the JSON path (it commits
-            # the dedup state in every partition); it also counts the
-            # corrupt frames. Deserialization failures are tagged
-            # _kind='corrupt' at routing (extract_stream_routing), so
-            # this is the exact ST11 failure count — the reference's
-            # per-message poison-pill accounting (KafkaUtil.java:
-            # 150-166) — taken on the PRE-SPLIT batch, independent of
-            # routing details
-            n_batch, n_bad = batch.agg(
-                F.count(F.lit(1)),
-                F.count_if(F.col("_kind") == "corrupt")).first()
-            if n_batch == 0:
-                # empty epoch: nothing to do but tick the hook
-                if maint_hook is not None:
-                    maint_hook.after_epoch(epoch_id)
-                return
-            if historical_dir is not None:
-                # K3: spool raw FRAMES (not typed rows) for the slow
-                # worker — parquet with a single binary column, the
-                # file-system analog of the historical Kafka topic.
-                # Only well-formed stream records are late-split: bulk
-                # pointers carry no event time and must resolve on the
-                # realtime path (the reference fetches bulk objects
-                # immediately, AvroMessageEventTransformer.java:87-99),
-                # and corrupt frames stay hot so ST11 accounting sees
-                # them — neither ever enters the spool.
-                # Same replay posture as the JSON path: classification
-                # clock pinned to the epoch's first attempt, spool
-                # append epoch-marker idempotent (_pinned_epoch_date /
-                # _handoff_once) — an unguarded append would re-spool
-                # the same late frames when Spark replays the epoch.
-                meta = _ckpt_meta(checkpoint, meta_store)
-                eff_now = now if now is not None else \
-                    _pinned_epoch_date(spark, checkpoint, epoch_id,
-                                       meta)
-                rt, hist = split_late(
-                    batch.filter(F.col("_kind") == "stream"),
-                    time_col="_event_time",
-                    outdated_day_index=outdated_day_index, now=eff_now)
-                _handoff_once(
-                    checkpoint, epoch_id,
-                    lambda: hist.select("value").write.mode("append")
-                    .parquet(historical_dir), meta)
-                hot = batch.filter(F.col("_kind") != "stream") \
-                    .unionByName(rt)
-            else:
-                hot = batch
-            if errors_dir is not None and n_bad:
-                # dead-letter spool: raw frame + cheap forensics cols;
-                # stays hot-path-exact because corrupt never spools
-                _spool_corrupt_frames(batch, errors_dir, epoch_id)
-            tables = _decode_avro_frames(
-                spark, hot, get_columns, project, default_collection,
-                bulk_base)
-            out = tables
-            if shard_time is not None:
-                out = {k: df.withColumn(
-                    "_shard_time", F.coalesce(
-                        "_shard_time", F.lit(shard_time).cast("timestamp")))
-                    for k, df in tables.items()}
-            committed = _commit_tables(out, table_base, manifested,
-                                       checkpoint, epoch_id)
-            if maint_hook is not None:
-                maint_hook.after_epoch(epoch_id)
-            _account(committed, n_bad, stats, error_monitor)
-        finally:
-            if tables is not None:
-                tables.unpersist()
-            batch.unpersist()
-
-    writer = (stream.writeStream
-              .foreachBatch(process)
-              .option("checkpointLocation", checkpoint))
-    trig = trigger or {"availableNow": True}
-    return _expose(writer.trigger(**trig).start(), maint_hook, stats,
-                   error_monitor)
+    return _start_epochs(
+        spark, stream.select("_kind", "_collection", "value", "_event_time",
+                             F.col("_kind").alias("_label")),
+        checkpoint, trigger,
+        lambda hot: _decode_avro_frames(spark, hot, catalog.get_columns,
+                                        project, default_collection,
+                                        bulk_base),
+        count_drops=False, table_base=table_base, manifested=manifested,
+        shard_time=shard_time, publish=publish, now=now,
+        outdated_day_index=outdated_day_index, meta_store=meta_store,
+        errors_dir=errors_dir, maint_hook=maint_hook, stats=stats,
+        error_monitor=error_monitor)
 
 
 def start_avro_historical_stream(spark: SparkSession, historical_dir: str,
@@ -870,15 +770,10 @@ def start_avro_historical_stream(spark: SparkSession, historical_dir: str,
     ``source_stream``) into the same tables — no late split, no dedup
     (already done on the hot path), mirroring
     KafkaHistoricalWorker.java:157-219. ``manifested`` must match the
-    realtime stream's: the drain then commits through the same version
-    protocol, its batch ids namespaced by its own checkpoint, so a
-    replayed drain epoch replaces its batch.
-
-    The hot path never spools corrupt frames, but a historical TOPIC
-    (``source_stream``) can deliver them, so the same A2/ST11
-    accounting and dead-letter options apply here: corrupt frames
-    count against ``error_monitor``, spool to ``errors_dir`` when set,
-    and are never silently dropped."""
+    realtime stream's; the drain's batch ids are namespaced by its own
+    checkpoint, so a replayed drain epoch replaces its batch. A
+    historical TOPIC can deliver corrupt frames, so they count against
+    ``error_monitor`` and spool to ``errors_dir`` here too."""
     from pyspark.sql import types as T
 
     from rakam_api_collector_spark.ingest.avro import extract_stream_routing
@@ -891,51 +786,25 @@ def start_avro_historical_stream(spark: SparkSession, historical_dir: str,
                                                    T.BinaryType())]))
                .format("parquet").load(historical_dir))
 
-    get_columns = catalog.get_columns
-    routed = extract_stream_routing(raw, get_columns, project,
+    routed = extract_stream_routing(raw, catalog.get_columns, project,
                                     default_collection=default_collection,
                                     source=source)
-
-    def process(batch: DataFrame, epoch_id: int) -> None:
-        batch = batch.select("_kind", "_collection", "value")
-        if error_monitor is not None or errors_dir is not None:
-            # the corrupt count and the spool re-read the batch beyond
-            # the decode pass — cache so they don't re-run routing
-            batch = batch.cache()
-        tables = _decode_avro_frames(
-            spark, batch, get_columns, project, default_collection,
-            bulk_base)
-        try:
-            out = tables
-            if shard_time is not None:
-                out = {k: df.withColumn(
-                    "_shard_time", F.coalesce(
-                        "_shard_time", F.lit(shard_time).cast("timestamp")))
-                    for k, df in tables.items()}
-            committed = _commit_tables(out, table_base, manifested,
-                                       checkpoint, epoch_id)
-            if errors_dir is not None:
-                _spool_corrupt_frames(batch, errors_dir, epoch_id,
-                                      stream="historical")
-            n_bad = (batch.filter(F.col("_kind") == "corrupt").count()
-                     if error_monitor is not None else 0)
-            _account(committed, n_bad, stats, error_monitor)
-        finally:
-            tables.unpersist()
-            batch.unpersist()
-
-    writer = (routed.writeStream
-              .foreachBatch(process)
-              .option("checkpointLocation", checkpoint))
-    trig = trigger or {"availableNow": True}
-    return _expose(writer.trigger(**trig).start(), stats=stats,
-                   error_monitor=error_monitor)
+    return _start_epochs(
+        spark, routed.select("_kind", "_collection", "value",
+                             F.col("_kind").alias("_label")),
+        checkpoint, trigger,
+        lambda hot: _decode_avro_frames(spark, hot, catalog.get_columns,
+                                        project, default_collection,
+                                        bulk_base),
+        count_drops=False, table_base=table_base, manifested=manifested,
+        shard_time=shard_time, errors_dir=errors_dir, name="historical",
+        stats=stats, error_monitor=error_monitor)
 
 
 def start_historical_stream(spark: SparkSession, historical_dir: str | None,
                             fmt: str, catalog: Catalog, table_base: str,
                             checkpoint: str, trigger: dict | None = None,
-                            time_field: str = "_time", shard_time=None,
+                            shard_time=None,
                             source_stream: DataFrame | None = None,
                             errors_dir: str | None = None,
                             manifested: bool = False,
@@ -948,51 +817,23 @@ def start_historical_stream(spark: SparkSession, historical_dir: str | None,
     substitutes a connector stream (e.g. the historical Kafka topic,
     ``sources.kafka.historical_reader(...).load()``) for the spool dir;
     such a topic can carry envelopes the parser would drop, so
-    ``errors_dir`` dead-letters them exactly as on the realtime path,
-    and they count as failures for ``error_monitor``.
-
-    ``manifested`` and ``layout`` must match the realtime stream's, so
-    drained rows land in the tables its readers read: manifested
-    commits go through the version protocol with batch ids namespaced
-    by the drain's own checkpoint, so a replayed drain epoch replaces
-    its batch instead of appending it twice."""
-    if layout not in ("per-table", "grouped"):
-        raise ValueError(f"unknown layout {layout!r}: "
-                         "expected 'per-table' or 'grouped'")
+    ``errors_dir`` and ``error_monitor`` treat them as on the realtime
+    path. ``manifested`` and ``layout`` must match the realtime
+    stream's, so drained rows land in the tables its readers read."""
+    _check_layout(layout, manifested)
     if source_stream is not None:
         raw = source_stream.select(
             F.col("value").cast("string").alias("value"))
     else:
         raw = spark.readStream.format("text").load(historical_dir)
 
-    def process(batch: DataFrame, epoch_id: int) -> None:
-        if error_monitor is not None:
-            # the failure count re-reads the batch beyond the parse
-            batch = batch.cache()
-        tables = None
-        try:
-            if errors_dir is not None:
-                _spool_dead_letters(
-                    batch.filter(_envelope_reject_predicate(fmt)),
-                    errors_dir, epoch_id, stream="historical")
-            tables = ingest_batch(spark, batch, fmt, catalog,
-                                  shard_time=shard_time,
-                                  time_field=time_field)
-            committed = _commit_tables(tables, table_base, manifested,
-                                       checkpoint, epoch_id, layout=layout)
-            # every record that was not committed was dropped by the
-            # router/parser (or dead-lettered)
-            failed = (max(batch.count() - sum(committed.values()), 0)
-                      if error_monitor is not None else 0)
-            _account(committed, failed, stats, error_monitor)
-        finally:
-            if tables is not None:
-                tables.unpersist()
-            batch.unpersist()
-
-    writer = (raw.writeStream
-              .foreachBatch(process)
-              .option("checkpointLocation", checkpoint))
-    trig = trigger or {"availableNow": True}
-    return _expose(writer.trigger(**trig).start(), stats=stats,
-                   error_monitor=error_monitor)
+    return _start_epochs(
+        spark, raw.select("value",
+                          _json_label(fmt, errors_dir).alias("_label")),
+        checkpoint, trigger,
+        lambda hot: ingest_batch(spark, hot.select("value"), fmt, catalog,
+                                 shard_time=shard_time,
+                                 time_field=TIME_FIELD),
+        count_drops=True, table_base=table_base, manifested=manifested,
+        layout=layout, errors_dir=errors_dir, name="historical",
+        stats=stats, error_monitor=error_monitor)

@@ -21,7 +21,7 @@ duplicate keys.
 
 State sizing: the harness pins ``state_partitions=4`` by default — the
 measured sweet spot for the reference's 30k-keys-per-batch shape (see
-``pipeline._set_state_partitions``: 32 partitions pay per-RocksDB
+``pipeline._stream_setup``: 32 partitions pay per-RocksDB
 commit overhead at ~1k keys each; 8 cut the steady batch wall 25-26 s
 → 15-16 s and 4 to 13-15 s in the same-box A/B). Pass a 5th argument
 to override (0 = leave the session default).

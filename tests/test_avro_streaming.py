@@ -545,3 +545,101 @@ def test_avro_epoch_jobs_do_not_grow_with_collections(spark, tmp_path,
     data2 = next(jobs2[e] for e, n in rows2.items() if n == 6)
     data5 = next(jobs5[e] for e, n in rows5.items() if n == 15)
     assert data5 - data2 <= 3, (jobs2, jobs5)
+
+
+def test_avro_historical_drain_epoch_jobs_do_not_grow_with_collections(
+        spark, tmp_path, epoch_jobs):
+    """The Avro drain runs the same epoch body as the realtime stream:
+    with manifested commits and the counters on, an empty-file epoch
+    runs exactly one job and 5 collections cost at most 3 jobs more
+    than 2."""
+    from rakam_api_collector_spark.streaming.committer import (
+        ErrorRateMonitor, IngestStats)
+
+    cat = Catalog(str(tmp_path / "catalog.json"))
+    fields = None
+    for c in range(5):
+        fields = cat.create_table("p1", f"t{c}", EXTRA)
+
+    def burst(n_collections, per=3):
+        return [_frame(fields, f"u{c}-{i}", f"2020-06-01T10:{c:02d}:{i:02d}",
+                       float(i), collection=f"t{c}")
+                for c in range(n_collections) for i in range(per)]
+
+    def run(name, bursts):
+        src = tmp_path / f"src_{name}"
+        _write_parquet_bursts(src, bursts)
+        stats = IngestStats()
+        epoch_jobs.clear()
+        q = start_avro_historical_stream(
+            spark, None, cat, str(tmp_path / f"tables_{name}"),
+            checkpoint=str(tmp_path / f"ckpt_{name}"), project="p1",
+            shard_time=SHARD_T, manifested=True,
+            stats=stats, error_monitor=ErrorRateMonitor(),
+            source_stream=spark.readStream.schema("value binary")
+            .option("maxFilesPerTrigger", 1).parquet(str(src)))
+        assert q.awaitTermination(120)
+        assert stats.total_records() == sum(len(b) for b in bursts)
+        rows = {p["batchId"]: p["numInputRows"] for p in q.recentProgress}
+        return dict(epoch_jobs), rows
+
+    jobs2, rows2 = run("two", [burst(2), []])
+    jobs5, rows5 = run("five", [burst(5)])
+
+    empty = [e for e, n in rows2.items() if n == 0]
+    assert empty, f"no empty epoch ran: {rows2}"
+    assert all(jobs2[e] == 1 for e in empty), (jobs2, rows2)
+    data2 = next(jobs2[e] for e, n in rows2.items() if n == 6)
+    data5 = next(jobs5[e] for e, n in rows5.items() if n == 15)
+    assert data5 - data2 <= 3, (jobs2, jobs5)
+
+
+def test_avro_k3_split_replays_no_state_changelog(spark, tmp_path):
+    """The Avro twin of the JSON replay test: with dedup and the
+    raw-frame spool, no data epoch replays RocksDB changelog files;
+    every frame is committed, spooled late or dead-lettered exactly
+    once, and the A2 and ST11 counters are exact."""
+    from rakam_api_collector_spark.manifest import ManifestedTable
+    from rakam_api_collector_spark.streaming.committer import (
+        ErrorRateMonitor, IngestStats)
+    from tests.test_streaming import _replayed_changelog_files
+
+    cat = Catalog(str(tmp_path / "catalog.json"))
+    fields = None
+    for c in range(2):
+        fields = cat.create_table("p1", f"t{c}", EXTRA)
+
+    def burst(b):
+        good = [_frame(fields, f"b{b}u{c}-{i}",
+                       f"2020-06-01T10:{c:02d}:{i:02d}", float(i),
+                       collection=f"t{c}")
+                for c in range(2) for i in range(3)]
+        late = _frame(fields, f"late{b}", "2020-05-20T10:00:00", 1.0,
+                      collection="t0")              # late, not expired
+        return good + [late, good[0][:6]]           # + a truncated frame
+
+    bursts = [burst(b) for b in range(4)]
+    bursts[3].append(bursts[2][0])                  # dedup drops it
+    src, base = tmp_path / "src", str(tmp_path / "tables")
+    _write_parquet_bursts(src, bursts)
+    stats, mon = IngestStats(), ErrorRateMonitor(min_records=1000)
+    q = start_avro_ingest_stream(
+        spark, None, cat, base, checkpoint=str(tmp_path / "ckpt"),
+        project="p1", historical_dir=str(tmp_path / "hist"),
+        errors_dir=str(tmp_path / "errors"), now=NOW, shard_time=SHARD_T,
+        dedup=True, manifested=True, stats=stats, error_monitor=mon,
+        source_stream=spark.readStream.schema("value binary")
+        .option("maxFilesPerTrigger", 1).parquet(str(src)))
+    assert q.awaitTermination(120)
+
+    replayed = _replayed_changelog_files(q)
+    assert len(replayed) == 4 and not any(replayed.values()), replayed
+    committed = sum(ManifestedTable(base, "p1", f"t{c}").read(spark)
+                    .count() for c in range(2))
+    handed = spark.read.parquet(str(tmp_path / "hist")).count()
+    dead = spark.read.parquet(str(tmp_path / "errors")).count()
+    assert (committed, handed, dead) == (24, 4, 4)
+    assert committed + handed + dead == sum(map(len, bursts)) - 1
+    assert stats.records == {("p1", "t0"): 12, ("p1", "t1"): 12}
+    assert (sum(e[1] for e in mon._events),
+            sum(e[2] for e in mon._events)) == (24, 4)

@@ -53,6 +53,36 @@ def test_split_late_repromotion(spark):
     assert hist.count() == 5        # stray old day below both thresholds
 
 
+def test_split_late_boundaries_and_precomputed_counts(spark):
+    """Re-promotion needs strictly more than both thresholds: a day
+    holding exactly ``promote_min_records`` rows, or exactly 25% of the
+    batch, stays historical, as does a null time. Passing the day
+    counts in gives the same partition as letting split_late take
+    them."""
+    def rows(days):
+        return [(i, t) for i, t in enumerate(
+            t for t, n in days for _ in range(n))]
+
+    at_min = rows([("2020-05-01 00:00:00", 4),     # 4 rows = min, 44%
+                   ("2020-06-01 00:00:00", 4), (None, 1)])
+    at_fraction = rows([("2020-05-01 00:00:00", 5),  # 25% of 20
+                        ("2020-04-01 00:00:00", 6),  # 30%: promoted
+                        ("2020-06-01 00:00:00", 8), (None, 1)])
+    for data, n_rt in ((at_min, 4), (at_fraction, 14)):
+        df = spark.createDataFrame(data, "id int, _time string") \
+            .withColumn("_time", F.col("_time").cast("timestamp"))
+        counts = {r[0]: r[1] for r in df.groupBy(
+            F.to_date("_time")).count().collect()}
+        splits = [split_late(df, now=NOW, promote_min_records=4,
+                             day_counts=day_counts)
+                  for day_counts in (None, counts)]
+        (rt, hist), (rt2, hist2) = [
+            [sorted(r.id for r in f.collect()) for f in s] for s in splits]
+        assert len(rt) == n_rt and len(rt) + len(hist) == len(data)
+        assert (rt, hist) == (rt2, hist2)
+        assert data[-1][0] in hist                  # the null time
+
+
 # --- end-to-end stream -------------------------------------------------------
 
 def _write_lines(path: Path, lines: list[str], name: str = "batch.json"):
@@ -525,6 +555,94 @@ def test_stream_epoch_jobs_do_not_grow_with_collections(spark, tmp_path,
     data2 = next(jobs2[e] for e, n in rows2.items() if n == 6)
     data5 = next(jobs5[e] for e, n in rows5.items() if n == 15)
     assert data5 - data2 <= 3, (jobs2, jobs5)
+
+
+def test_historical_drain_epoch_jobs_do_not_grow_with_collections(
+        spark, tmp_path, epoch_jobs):
+    """The JSON drain runs the same epoch body as the realtime stream:
+    with manifested commits and the counters on, an empty-file epoch
+    runs exactly one job and 5 collections cost at most 3 jobs more
+    than 2."""
+    from rakam_api_collector_spark.streaming.committer import (
+        ErrorRateMonitor, IngestStats)
+
+    def run(name, bursts):
+        src = tmp_path / f"src_{name}"
+        _write_bursts(src, bursts)
+        stats = IngestStats()
+        epoch_jobs.clear()
+        q = start_historical_stream(
+            spark, None, "fabric", Catalog(),
+            table_base=str(tmp_path / f"tables_{name}"),
+            checkpoint=str(tmp_path / f"ckpt_{name}"),
+            shard_time=SHARD_T, manifested=True,
+            stats=stats, error_monitor=ErrorRateMonitor(),
+            source_stream=spark.readStream
+            .option("maxFilesPerTrigger", 1).text(str(src)))
+        assert q.awaitTermination(120)
+        assert stats.total_records() == sum(len(b) for b in bursts)
+        return dict(epoch_jobs), _rows_by_epoch(q)
+
+    jobs2, rows2 = run("two", [_burst(2), []])
+    jobs5, rows5 = run("five", [_burst(5)])
+
+    empty = [e for e, n in rows2.items() if n == 0]
+    assert empty, f"no empty epoch ran: {rows2}"
+    assert all(jobs2[e] == 1 for e in empty), (jobs2, rows2)
+    data2 = next(jobs2[e] for e, n in rows2.items() if n == 6)
+    data5 = next(jobs5[e] for e, n in rows5.items() if n == 15)
+    assert data5 - data2 <= 3, (jobs2, jobs5)
+
+
+def _replayed_changelog_files(q) -> dict[int, int]:
+    """RocksDB changelog files each data epoch replayed to load the
+    dedup state, summed over state partitions."""
+    return {p["batchId"]: p["stateOperators"][0]["customMetrics"]
+            ["rocksdbNumReplayChangelogFiles"]
+            for p in q.recentProgress if p["numInputRows"] > 0}
+
+
+def test_stream_k3_split_replays_no_state_changelog(spark, tmp_path):
+    """With dedup and a K3 channel, the late split filters the cached
+    batch, so no action over its outputs re-runs the dedup operator —
+    such a re-run reloads the state store one version back and replays
+    every changelog file since its last snapshot, a cost that grows
+    with the stream's age. No data epoch replays any; every record is
+    committed, handed off or dead-lettered exactly once, and the A2 and
+    ST11 counters are exact."""
+    from rakam_api_collector_spark.manifest import ManifestedTable
+    from rakam_api_collector_spark.streaming.committer import (
+        ErrorRateMonitor, IngestStats)
+
+    bursts = [_burst(2, tag=f"b{b}") + [
+        fabric("c0", {"_time": "2020-05-20T10:00:00", "_user": f"late{b}",
+                      "v": b}),                       # late, not expired
+        '{"data": {broken'] for b in range(4)]
+    bursts[3].append(bursts[2][0])                    # dedup drops it
+    src, base = tmp_path / "src", str(tmp_path / "tables")
+    _write_bursts(src, bursts)
+    stats, mon = IngestStats(), ErrorRateMonitor(min_records=1000)
+    q = start_ingest_stream(
+        spark, str(src), "fabric", Catalog(), table_base=base,
+        checkpoint=str(tmp_path / "ckpt"),
+        historical_dir=str(tmp_path / "hist"),
+        errors_dir=str(tmp_path / "errors"),
+        now=NOW, shard_time=SHARD_T, dedup=True, manifested=True,
+        stats=stats, error_monitor=mon, max_files_per_trigger=1)
+    assert q.awaitTermination(120)
+
+    replayed = _replayed_changelog_files(q)
+    assert len(replayed) == 4 and not any(replayed.values()), replayed
+    committed = sum(ManifestedTable(base, "testproject", f"c{c}")
+                    .read(spark).count() for c in range(2))
+    handed = spark.read.text(str(tmp_path / "hist")).count()
+    dead = spark.read.parquet(str(tmp_path / "errors")).count()
+    assert (committed, handed, dead) == (24, 4, 4)
+    assert committed + handed + dead == sum(map(len, bursts)) - 1
+    assert stats.records == {("testproject", "c0"): 12,
+                             ("testproject", "c1"): 12}
+    assert (sum(e[1] for e in mon._events),
+            sum(e[2] for e in mon._events)) == (24, 4)
 
 
 def test_stream_maintenance_ticks_on_empty_epochs(spark, tmp_path):
