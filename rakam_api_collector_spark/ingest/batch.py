@@ -28,14 +28,16 @@ The Spark-first re-expression of the reference's
 
 Scale: step 2 is one codegen'd projection over the raw bytes; the
 per-collection loop touches only metadata (the reference loops per table
-the same way). 100 collections → 100 DataFrames sharing one scan via
-cache or a partitioned write (sinks.py).
+the same way). 100 same-shape collections → one typed group frame over
+one cached scan; a collection's own DataFrame is built only when read
+(``IngestResult``), so grouped writes (sinks.py, the manifested commit)
+never build it.
 """
 
 from __future__ import annotations
 
 import json
-from collections.abc import Iterator
+from collections.abc import Iterator, Mapping
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -90,23 +92,51 @@ def _first_wins_normalizer(df: DataFrame, col: str) -> DataFrame:
     return df.mapInPandas(norm, df.schema)
 
 
-class IngestResult(dict):
+class IngestResult(Mapping):
     """``{(project, collection): DataFrame}`` plus an ``unpersist()`` handle
     for the shared parsed-batch cache the collection frames fan out from.
     Callers that consume the frames (write, count) should call
     ``unpersist()`` afterwards — on a long-running stream, leaked per-batch
-    caches accumulate storage blocks until LRU eviction churns the pool."""
+    caches accumulate storage blocks until LRU eviction churns the pool.
 
-    def __init__(self, tables: dict, cached: DataFrame,
-                 groups: list | None = None):
-        super().__init__(tables)
+    The keys and each collection's catalog column order (``orders``) are
+    fixed at ingest; a collection's frame — a filter plus a reorder over
+    its schema group's typed frame — is built only when a caller reads
+    ``result[(project, collection)]``, then kept. Building one costs tens
+    of ms of driver-side plan analysis, so a sink that writes the group
+    frames (``groups``) never pays it per collection."""
+
+    def __init__(self, orders: dict[tuple[str, str], list[str]],
+                 cached: DataFrame, groups: list | None = None):
         self._cached = cached
+        #: {(project, collection): [column, ...]} in catalog order
+        self.orders = orders
         #: [(project, [collection, ...], group_df)] — one typed frame
-        #: per (project, schema-signature), carrying a ``_collection``
-        #: column. Grouped sinks write one job per entry
-        #: (sinks.write_collections layout="grouped") instead of one
-        #: per collection.
+        #: per (project, schema-signature), its columns name-sorted
+        #: after a leading ``_collection``. Grouped sinks write one job
+        #: per entry instead of one per collection.
         self.groups = groups or []
+        self._group_of = {(p, c): df for p, colls, df in self.groups
+                          for c in colls}
+        self._views: dict[tuple[str, str], DataFrame] = {}
+
+    def __getitem__(self, key: tuple[str, str]) -> DataFrame:
+        view = self._views.get(key)
+        if view is None:
+            view = (self._group_of[key]
+                    .filter(F.col("_collection") == key[1])
+                    .select(*self.orders[key]))
+            self._views[key] = view
+        return view
+
+    def __contains__(self, key) -> bool:      # without building a view
+        return key in self.orders
+
+    def __iter__(self) -> Iterator[tuple[str, str]]:
+        return iter(self.orders)
+
+    def __len__(self) -> int:
+        return len(self.orders)
 
     def unpersist(self) -> None:
         self._cached.unpersist()
@@ -211,7 +241,6 @@ def ingest_batch(spark: SparkSession, raw: DataFrame, fmt: str,
                                      for f in cols)))
         by_sig.setdefault(sig, []).append(collection)
 
-    out: dict[tuple[str, str], DataFrame] = {}
     groups: list = []
     for (project, _), collections in by_sig.items():
         canon = sorted(resolved[(project, collections[0])],
@@ -222,14 +251,9 @@ def ingest_batch(spark: SparkSession, raw: DataFrame, fmt: str,
                                  shard_time, expr_cache, compat,
                                  passthrough=("_collection",))
         groups.append((project, list(collections), typed_g))
-        for collection in collections:
-            # contract-preserving per-collection view over the shared
-            # group plan: filter + plain-column reorder to catalog order
-            order = [f.name for f in resolved[(project, collection)]]
-            out[(project, collection)] = (
-                typed_g.filter(F.col("_collection") == collection)
-                .select(*order))
-    return IngestResult(out, parsed, groups)
+    orders = {(p, c): [f.name for f in resolved[(p, c)]]
+              for p, colls, _ in groups for c in colls}
+    return IngestResult(orders, parsed, groups)
 
 
 def _discover_new_fields(parsed: DataFrame, catalog: Catalog,

@@ -1304,13 +1304,21 @@ class ManifestedTable:
                          f"{self.batches_dir}/{entry['dir']}", fmt,
                          entry, bloom_for)
 
+        self._commit_entry(entry)
+        return bid
+
+    def _commit_entry(self, entry: dict) -> None:
+        """Publish ``entry`` in the next version, replacing any live
+        batch with its id (an at-least-once retry); the add-only schema
+        check re-runs against each OCC attempt's live set."""
+        bid, fields = entry["batch"], entry["schema"]["fields"]
+
         def mutate(live):
             self._check_evolution(live, fields, replacing=bid)
             return [b for b in live if b["batch"] != bid] + [entry]
 
         self._commit(mutate)
         self.last_entry = entry
-        return bid
 
     def _write_batch_files(self, out: DataFrame, bid: str, fmt: str,
                            rows: int | None = None,
@@ -1330,19 +1338,53 @@ class ManifestedTable:
         if partition:
             writer = writer.partitionBy("_day")
         writer.save(path)
-        stats, files, footer_rows = _footer_stats(path, fmt)
-        if rows is None:
-            rows = footer_rows
-        if rows is None:
+        entry = self._entry_of(bid, pdir, fmt, json.loads(out.schema.json()),
+                               rows)
+        if entry["rows"] is None:
             # ORC: no footer walk, so a Spark count over the written
             # files (schema inference + count, two jobs)
-            rows = out.sparkSession.read.format(fmt).load(path).count()
-        entry = {"batch": bid, "dir": pdir, "rows": rows, "format": fmt,
-                 "schema": json.loads(out.schema.json())}
+            entry["rows"] = out.sparkSession.read.format(fmt) \
+                .load(path).count()
+        return entry
+
+    def _entry_of(self, bid: str, pdir: str, fmt: str, schema: dict,
+                  rows: int | None = None) -> dict:
+        """The manifest entry of the batch files already written under
+        ``batches_dir/pdir``: zone maps, the file list and, unless the
+        caller counted them, the rows from the parquet footers (None
+        for ORC)."""
+        stats, files, footer_rows = _footer_stats(
+            f"{self.batches_dir}/{pdir}", fmt)
+        entry = {"batch": bid, "dir": pdir,
+                 "rows": footer_rows if rows is None else rows,
+                 "format": fmt, "schema": schema}
         if stats:
             entry["stats"] = stats
         if files:
             entry["files"] = files
+        return entry
+
+    def adopt(self, staged: str, batch_id: str, schema: dict,
+              fmt: str = "parquet") -> dict:
+        """Commit, as batch ``batch_id``, the files another job already
+        wrote under the local directory ``staged`` (hive ``_day=…``
+        partitions or flat files): the directory is renamed into a
+        fresh ``_batches/<batch_id>--<uuid8>`` dir, so the batch has the
+        layout write() gives it, then committed as write() commits.
+        ``schema`` is the entry's column order, which readers restore
+        (``_read_batches``) when the files carry another. A missing
+        ``staged`` dir is a zero-row batch. Returns the entry."""
+        pdir = f"{batch_id}--{uuid.uuid4().hex[:8]}"
+        target = f"{self.batches_dir}/{pdir}"
+        os.makedirs(self.batches_dir, exist_ok=True)
+        if os.path.isdir(staged):
+            os.rename(staged, target)
+        else:
+            os.makedirs(target)
+        entry = self._entry_of(batch_id, pdir, fmt, schema)
+        if entry["rows"] == 0:
+            entry["files"] = []          # authoritative: nothing to scan
+        self._commit_entry(entry)
         return entry
 
     @staticmethod
@@ -1543,8 +1585,15 @@ class ManifestedTable:
                 if not keep:
                     continue
                 target = [os.path.join(path, f["path"]) for f in keep]
-            dfs.append(spark.read.option("basePath", path)
-                       .format(m["format"]).load(target))
+            df = spark.read.option("basePath", path) \
+                .format(m["format"]).load(target)
+            # a batch adopted from a grouped write stores its columns
+            # name-sorted; the entry schema holds the order to return
+            names = [f["name"] for f in (m.get("schema") or {})
+                     .get("fields", [])]
+            if names != df.columns and sorted(names) == sorted(df.columns):
+                df = df.select(*names)
+            dfs.append(df)
         if not dfs:
             return None
         df = dfs[0]
@@ -2442,3 +2491,82 @@ class ManifestedTable:
             # delete() treats missing as success (concurrent sweep)
             self.meta.delete(f"{self.versions_dir}/v{n:010d}.json")
         return removed
+
+
+STAGING_DIR = "_staging"
+
+
+def commit_groups(base: str, groups: list,
+                  orders: dict[tuple[str, str], list[str]],
+                  batch_id: str) -> dict[tuple[str, str], int]:
+    """Commit batch ``batch_id`` to every collection of ``groups`` —
+    ``[(project, [collection, ...], frame)]``, each frame carrying a
+    ``_collection`` column and only those collections' rows — with ONE
+    parquet write per group instead of one per collection.
+
+    Each group frame is written once under the local staging dir
+    ``base/_staging/<batch_id>--<uuid8>/<group>``, hash-partitioned
+    (``sinks._grouped_writer_frame``) on a per-group integer collection
+    index plus ``_day``, so every (collection, day) pair is one file and
+    no user-supplied collection name is ever escaped into a path. Each
+    collection's index subtree is then renamed into its own table's
+    ``_batches`` and committed through the table's OCC loop
+    (``ManifestedTable.adopt``): replay, gc, orphans, clones and CoW
+    rewrites see the usual layout. The entry schema is the collection's
+    column order from ``orders`` plus ``_day``.
+
+    A failed attempt leaves its staging dir behind; nothing reads
+    ``_staging`` (readers follow manifests, and the maintenance sweep
+    only visits dirs holding ``_versions``), and the replay of the same
+    ``batch_id`` deletes it before writing. Returns
+    ``{(project, collection): rows committed}``."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from rakam_api_collector_spark.sinks import _grouped_writer_frame
+
+    meta = LocalMetadataStore()
+    root = f"{base}/{STAGING_DIR}"
+    for d in meta.list(root):
+        if d.startswith(f"{batch_id}--"):
+            meta.delete_tree(f"{root}/{d}")
+    stage = f"{root}/{batch_id}--{uuid.uuid4().hex[:8]}"
+
+    def write_group(item) -> list[tuple]:
+        gi, (project, collections, df) = item
+        ci = "_ci"
+        while ci in df.columns:          # never shadow a user column
+            ci += "_"
+        out = df.withColumn(ci, F.array_position(
+            F.array(*map(F.lit, collections)), F.col("_collection")))
+        out = out.drop("_collection")
+        parts = [ci]
+        if "_time" in df.columns:
+            out = out.withColumn("_day", F.to_date("_time"))
+            parts.append("_day")
+        fields = {f["name"]: f
+                  for f in json.loads(out.schema.json())["fields"]}
+        staged = []
+        for i, c in enumerate(collections, 1):
+            table = ManifestedTable(base, project, c)
+            schema = {"type": "struct", "fields": [
+                fields[n] for n in orders[(project, c)] + parts[1:]]}
+            # fail fast before writing, as write() does
+            table._check_evolution(table.committed(), schema["fields"],
+                                   replacing=batch_id)
+            staged.append(((project, c), table,
+                           f"{stage}/{gi}/{ci}={i}", schema))
+        (_grouped_writer_frame(out, parts, 0).write.mode("overwrite")
+         .partitionBy(*parts).parquet(f"{stage}/{gi}"))
+        return staged
+
+    def adopt(item) -> tuple[tuple[str, str], int]:
+        key, table, path, schema = item
+        return key, table.adopt(path, batch_id, schema)["rows"]
+
+    with ThreadPoolExecutor(16) as pool:
+        staged = [s for group in pool.map(write_group, enumerate(groups))
+                  for s in group]
+        committed = dict(pool.map(adopt, staged))
+    if meta.is_dir(stage):
+        meta.delete_tree(stage)
+    return committed

@@ -221,13 +221,20 @@ def _dedup(stream: DataFrame, user: Column, time_key: Column) -> DataFrame:
 
 
 def _check_layout(layout: str, manifested: bool) -> None:
+    """Refuse, at start time, a layout the sink cannot serve.
+    ``layout="grouped"`` stays refused with ``manifested=True`` because
+    the on-disk layouts differ: the grouped sink appends Hive-style
+    ``base/project/_collection=…/_day=…`` dirs, a manifested table is
+    ``base/project/collection`` with ``_batches`` and ``_versions``.
+    Manifested commits already write once per schema group
+    (``_commit_tables``), so the option would buy nothing there."""
     if layout not in ("per-table", "grouped"):
         raise ValueError(f"unknown layout {layout!r}: "
                          "expected 'per-table' or 'grouped'")
     if layout == "grouped" and manifested:
         raise ValueError("layout='grouped' and manifested=True are "
                          "incompatible — the manifest commit protocol "
-                         "is per-collection")
+                         "keeps per-collection table dirs")
 
 
 _EPOCH_FILE_RETAIN = 128
@@ -335,14 +342,26 @@ def _commit_tables(tables, table_base: str, manifested: bool,
     Per-collection commits overlap from a thread pool either way
     (manifest.py; RaptorDatabaseHandler.java:312-339).
 
+    Manifested mode writes ONE parquet job per (project, schema group)
+    when ``tables`` carries ``.groups`` (the JSON ingest result):
+    ``manifest.commit_groups`` stages each group frame under the table
+    base, renames every collection's part into its table's
+    ``_batches`` and commits it there, so the epoch's write jobs scale
+    with schema groups, not collections. Three cases keep the
+    per-collection ``ManifestedTable.write``:
+
+    - a table with CHECK constraints (its write checks a
+      localCheckpoint of exactly the rows it persists);
+    - a table base with a URI scheme (on an object store a rename is a
+      copy);
+    - a result without ``.groups`` (the Avro decoders).
+
     ``layout="grouped"`` commits ONE write job per (project,
     schema-group) via ``write_collections_grouped`` (Hive-style
-    ``_collection=…/_day=…`` partitions) instead of one per collection
-    — at the reference's 100-collections-per-batch stress shape the
-    steady-state micro-batch wall is commit-fan-out-bound, and this is
-    the sink whose job count scales with #schemas, not #collections.
-    Requires a result carrying ``.groups`` (the JSON ingest path); the
-    starters refuse it with ``manifested`` (``_check_layout``).
+    ``_collection=…/_day=…`` partitions) — the plain sink whose job
+    count scales with #schemas, not #collections. Requires a result
+    carrying ``.groups`` (the JSON ingest path); the starters refuse it
+    with ``manifested`` (``_check_layout``).
 
     Returns ``{(project, collection): rows written}``, read from what
     the commit wrote rather than counted again: the manifest entry's
@@ -361,20 +380,39 @@ def _commit_tables(tables, table_base: str, manifested: bool,
         return write_collections(tables, table_base)
     from concurrent.futures import ThreadPoolExecutor
     from hashlib import md5 as _md5
+    from urllib.parse import urlparse
 
-    from rakam_api_collector_spark.manifest import ManifestedTable
-    ns = _md5(checkpoint.encode()).hexdigest()[:8]
+    from rakam_api_collector_spark.manifest import (ManifestedTable,
+                                                    commit_groups)
+    bid = f"{_md5(checkpoint.encode()).hexdigest()[:8]}-epoch-{epoch_id}"
+    groups = getattr(tables, "groups", None) or []
+    if groups and not urlparse(table_base).scheme:
+        per_table = {key for key in tables
+                     if ManifestedTable(table_base, *key).constraints}
+    else:
+        per_table, groups = set(tables), []
 
-    def commit_one(item):
-        (project, collection), df = item
-        table = ManifestedTable(table_base, project, collection)
-        table.write(df, batch_id=f"{ns}-epoch-{epoch_id}")
-        return (project, collection), table.last_entry["rows"]
+    def commit_one(key):
+        table = ManifestedTable(table_base, *key)
+        table.write(tables[key], batch_id=bid)
+        return key, table.last_entry["rows"]
 
-    if len(tables) <= 1:
-        return dict(map(commit_one, tables.items()))
-    with ThreadPoolExecutor(min(16, len(tables))) as pool:
-        return dict(pool.map(commit_one, tables.items()))
+    if len(per_table) <= 1:
+        committed = dict(map(commit_one, per_table))
+    else:
+        with ThreadPoolExecutor(min(16, len(per_table))) as pool:
+            committed = dict(pool.map(commit_one, per_table))
+    grouped = []
+    for project, collections, df in groups:
+        kept = [c for c in collections if (project, c) not in per_table]
+        if len(kept) < len(collections):
+            df = df.filter(F.col("_collection").isin(kept))
+        if kept:
+            grouped.append((project, kept, df))
+    if grouped:
+        committed.update(commit_groups(table_base, grouped, tables.orders,
+                                       bid))
+    return committed
 
 
 def _account(committed: dict[tuple[str, str], int], failed: int,

@@ -29,7 +29,7 @@ to override (0 = leave the session default).
 Usage: python scripts/stress_sustained.py \
            [json|json-grouped|json-manifested[-fair]|avro|
             avro-manifested[-fair]|both|kinesis-partitioned|kafka|
-            kafka-loop] \
+            kafka-loop|kafka-loop-manifested] \
            [n_per_batch] [n_batches] [n_collections] [state_partitions] \
            [maint_profile: throttled|wave]
 
@@ -40,7 +40,8 @@ readerMode=partitioned (mid-run shard split) or format("kafka_py")
 ``kafka-loop`` (r14) runs the FULL late-data loop under the same
 bursts: realtime split → historical topic re-publish → availableNow
 drain into the same tables, with source-side conservation asserted
-(every envelope ingested via exactly one path).
+(every envelope ingested via exactly one path); ``kafka-loop-manifested``
+runs it into manifested tables and checks delivery on the table side.
 
 ``json-manifested-fair`` rebuilds the session under the FAIR scheduler
 with the packaged low-weight ``manifest-maintenance`` pool
@@ -248,6 +249,15 @@ def run_avro(spark, n: int, n_batches: int, n_coll: int,
     return rec
 
 
+def _dropped(d: dict) -> int:
+    """Rows the dedup operator dropped in one progress report:
+    duplicates plus rows behind the watermark."""
+    return sum(op.get("numRowsDroppedByWatermark", 0)
+               + op.get("customMetrics", {}).get("numDroppedDuplicateRows",
+                                                 0)
+               for op in d.get("stateOperators", []))
+
+
 def _drive_bursts(q, put_batch, n: int, n_batches: int,
                   reshard=None) -> list[dict]:
     """Produce burst b, wait for the query to consume it, then b+1
@@ -264,7 +274,8 @@ def _drive_bursts(q, put_batch, n: int, n_batches: int,
                 seen[d["batchId"]] = {
                     "rows": d["numInputRows"],
                     "wall_sec": round(
-                        d["durationMs"]["triggerExecution"] / 1000.0, 2)}
+                        d["durationMs"]["triggerExecution"] / 1000.0, 2),
+                    "dropped": _dropped(d)}
         return sum(v["rows"] for v in seen.values())
 
     deadline = time.time() + 1800
@@ -411,7 +422,8 @@ def run_kafka_py(spark, n: int, n_batches: int, n_coll: int,
 
 def run_kafka_late_loop(spark, n: int, n_batches: int, n_coll: int,
                         n_partitions: int = 4,
-                        state_partitions: int | None = 4) -> dict:
+                        state_partitions: int | None = 4,
+                        manifested: bool = False) -> dict:
     """The FULL late-data loop under sustained load — the r14
     integration test's topology (test_kafka_local.py:
     test_late_data_loop_realtime_to_historical_to_same_table) at the
@@ -426,7 +438,14 @@ def run_kafka_late_loop(spark, n: int, n_batches: int, n_coll: int,
     ingested via exactly one path (the epoch-marker handoff plus
     drain-side dedup compose to the exactly-once table effect) — and
     reports the realtime steady wall WITH the split+produce overhead
-    against the same 15 s budget, plus the drain's own wall."""
+    against the same 15 s budget, plus the drain's own wall.
+
+    ``manifested`` (``kafka-loop-manifested``) commits both queries
+    through manifested tables and also asserts delivery on the table
+    side: every consumed envelope is committed, handed off or dropped
+    by dedup (duplicate or behind the watermark), and the committed
+    counts equal the rows the tables' manifests hold."""
+    from rakam_api_collector_spark.streaming.committer import IngestStats
     from rakam_api_collector_spark.sources.kafka import (
         checkpoint_lag, historical_producer_for, register_kafka_py)
     from rakam_api_collector_spark.sources.kafka_local import \
@@ -450,6 +469,7 @@ def run_kafka_late_loop(spark, n: int, n_batches: int, n_coll: int,
            .option("startingOffsets", "earliest")
            .load())
     cat = Catalog()
+    rt_stats, drain_stats = IngestStats(), IngestStats()
     t0 = time.perf_counter()
     q = start_ingest_stream(
         spark, None, "fabric", cat,
@@ -458,7 +478,8 @@ def run_kafka_late_loop(spark, n: int, n_batches: int, n_coll: int,
         now=NOW, shard_time=SHARD_T, dedup=True,
         trigger={"processingTime": "1 second"},
         state_partitions=state_partitions, source_stream=src,
-        historical_producer=historical_producer_for(broker, "hist"))
+        historical_producer=historical_producer_for(broker, "hist"),
+        manifested=manifested, stats=rt_stats)
     batches = _drive_bursts(q, put_batch, n, n_batches)
     q.stop()
     q.awaitTermination(120)
@@ -480,14 +501,37 @@ def run_kafka_late_loop(spark, n: int, n_batches: int, n_coll: int,
         table_base=str(work / "tables"), checkpoint=ck_hist,
         now=NOW, shard_time=SHARD_T, dedup=True,
         state_partitions=state_partitions,
-        source_stream=drain_src)
+        source_stream=drain_src, manifested=manifested, stats=drain_stats)
     dq.awaitTermination(600)
     drain_wall = time.perf_counter() - t0
     assert checkpoint_lag(ck_hist, broker, ["hist"]) == 0
     drain_in = sum(b["rows"] for b in _progress_rows(dq))
 
-    rec = _report("kafka_late_loop", batches, n_batches, rt_wall,
+    drain_dropped = sum(_dropped(p if isinstance(p, dict)
+                                 else json.loads(p.json))
+                        for p in dq.recentProgress)
+    rec = _report("kafka_late_loop_manifested" if manifested
+                  else "kafka_late_loop", batches, n_batches, rt_wall,
                   total_rows=n * n_batches)
+    if manifested:
+        from rakam_api_collector_spark.manifest import ManifestedTable
+        rt_dropped = sum(b["dropped"] for b in batches)
+        delivered = rt_stats.total_records() + hist_backlog + rt_dropped
+        table_rows = sum(ManifestedTable(str(work / "tables"), p, c).rows()
+                         for p, c in cat.tables())
+        assert delivered == n * n_batches, (delivered, n * n_batches)
+        assert (drain_stats.total_records() + drain_dropped
+                == hist_backlog), (drain_stats.total_records(),
+                                   drain_dropped, hist_backlog)
+        assert table_rows == (rt_stats.total_records()
+                              + drain_stats.total_records()), table_rows
+        rec.update({
+            "delivered": f"{delivered}/{n * n_batches}",
+            "committed_realtime": rt_stats.total_records(),
+            "committed_drain": drain_stats.total_records(),
+            "dedup_dropped": rt_dropped + drain_dropped,
+            "table_rows": table_rows,
+        })
     # source-side conservation across the loop: the realtime query
     # consumed every produced envelope (asserted by _report) and the
     # drain consumed every re-published one — so each envelope was
@@ -549,9 +593,10 @@ def main() -> None:
     if mode in ("kafka",):
         print(json.dumps(run_kafka_py(
             spark, n, n_batches, n_coll, state_partitions=sp)))
-    if mode in ("kafka-loop",):
+    if mode in ("kafka-loop", "kafka-loop-manifested"):
         print(json.dumps(run_kafka_late_loop(
-            spark, n, n_batches, n_coll, state_partitions=sp)))
+            spark, n, n_batches, n_coll, state_partitions=sp,
+            manifested=mode == "kafka-loop-manifested")))
 
 
 if __name__ == "__main__":

@@ -2363,3 +2363,119 @@ def test_orc_entry_rows_exact(spark, tmp_path):
     t.write(df.repartition(4), batch_id="o1", fmt="orc")
     assert t.last_entry["rows"] == 9
     assert [m["rows"] for m in t.committed()] == [9]
+
+
+# --- grouped manifested commit (one parquet write per schema group) ---------
+
+def _ingest_six(spark, cat):
+    """Six same-shape collections in one schema group: ``p`` and ``q``
+    hold one column set in different catalog orders, and four names
+    Spark escapes in paths. Four rows each over three days."""
+    from pyspark.sql import types as T
+
+    from rakam_api_collector_spark.ingest import ingest_batch
+    from tests.test_ingest import fabric
+
+    a, b = T.StructField("a", T.DoubleType()), T.StructField("b",
+                                                             T.StringType())
+    cat.create_table("testproject", "p", [a, b])
+    cat.create_table("testproject", "q", [b, a])
+    names = ["p", "q", "a=b", "x:y", "50%", "a b"]
+    lines = [fabric(c, {"_time": f"2020-06-0{d}T10:{i:02d}:00",
+                        "_user": f"{c}-{d}-{i}", "a": i * 1.5 - d,
+                        "b": f"{c}{i}"})
+             for c in names for d in (1, 2, 3) for i in range(4)]
+    raw = spark.createDataFrame([(ln,) for ln in lines], ["value"]) \
+        .repartition(3)
+    return names, ingest_batch(spark, raw, "fabric", cat,
+                               shard_time="2020-06-01 00:00:00")
+
+
+def _stats_by_day(entry: dict) -> dict:
+    """Per ``_day=`` dir, the zone map merged over its listed files."""
+    by_day: dict = {}
+    for f in entry["files"]:
+        by_day.setdefault(f["path"].split("/")[0], []).append(f["stats"])
+    return {day: {c: [min(s[c][0] for s in stats),
+                      max(s[c][1] for s in stats)]
+                  for c in set.intersection(*(set(s) for s in stats))}
+            for day, stats in by_day.items()}
+
+
+def test_grouped_commit_matches_per_table_write(spark, tmp_path):
+    """A manifested epoch committed with one parquet write per schema
+    group gives each collection what the per-collection write() gives
+    it: the same read() rows, columns and column order, the same
+    format("manifest") result, exact entry rows, the same schema and
+    zone maps, and a file list that names exactly the files written —
+    one per (collection, day)."""
+    from rakam_api_collector_spark.datasource import ManifestDataSource
+    from rakam_api_collector_spark.ingest import Catalog
+    from rakam_api_collector_spark.streaming.pipeline import _commit_tables
+
+    spark.dataSource.register(ManifestDataSource)
+    cat = Catalog()
+    names, res = _ingest_six(spark, cat)
+    assert len(res.groups) == 1
+    assert res.orders[("testproject", "p")][-2:] == ["a", "b"]
+    assert res.orders[("testproject", "q")][-2:] == ["b", "a"]
+    gbase, tbase = str(tmp_path / "grouped"), str(tmp_path / "per_table")
+    got_g = _commit_tables(res, gbase, True, "ckpt", 0)
+    got_t = _commit_tables(dict(res), tbase, True, "ckpt", 0)
+    assert got_g == got_t == {("testproject", c): 12 for c in names}
+
+    def sort(rows):
+        return sorted(tuple(r) for r in rows)
+
+    for c in names:
+        g = ManifestedTable(gbase, "testproject", c)
+        t = ManifestedTable(tbase, "testproject", c)
+        [eg], [et] = g.committed(), t.committed()
+        assert eg["rows"] == et["rows"] == 12
+        assert eg["batch"] == et["batch"]
+        assert eg["schema"] == et["schema"]
+        assert [f["name"] for f in eg["schema"]["fields"]] == \
+            res.orders[("testproject", c)] + ["_day"]
+        assert eg["stats"] == et["stats"]
+        assert _stats_by_day(eg) == _stats_by_day(et)
+        on_disk = sorted(
+            os.path.relpath(os.path.join(root, f), g._batch_path(eg))
+            for root, _, fs in os.walk(g._batch_path(eg))
+            for f in fs if f.endswith(".parquet"))
+        assert sorted(f["path"] for f in eg["files"]) == on_disk
+        assert len(on_disk) == 3                 # one file per day
+        rg, rt = g.read(spark), t.read(spark)
+        assert rg.columns == rt.columns == \
+            [f["name"] for f in et["schema"]["fields"]]
+        assert sort(rg.collect()) == sort(rt.collect())
+        mg, mt = (spark.read.format("manifest").option("path", x.table_dir)
+                  .load() for x in (g, t))
+        assert mg.columns == mt.columns
+        assert sort(mg.collect()) == sort(mt.collect())
+    assert not os.listdir(os.path.join(gbase, "_staging"))
+
+
+def test_grouped_commit_constrained_table_still_refuses(spark, tmp_path):
+    """A table with a CHECK constraint keeps the per-collection write
+    (its check runs on a localCheckpoint of the rows it persists) while
+    the rest of its schema group commits from one write: violating rows
+    are refused and leave that table empty, clean rows commit."""
+    from rakam_api_collector_spark.ingest import Catalog
+    from rakam_api_collector_spark.manifest import ConstraintViolation
+    from rakam_api_collector_spark.streaming.pipeline import _commit_tables
+
+    for base, bound, refused in (("bad", 0, True), ("ok", -10, False)):
+        base = str(tmp_path / base)
+        guarded = ManifestedTable(base, "testproject", "p")
+        guarded.add_constraint("a_floor", f"a >= {bound}")
+        names, res = _ingest_six(spark, Catalog())
+        if refused:
+            with pytest.raises(ConstraintViolation, match="a_floor"):
+                _commit_tables(res, base, True, "ckpt", 0)
+            assert guarded.committed() == []
+            continue
+        assert _commit_tables(res, base, True, "ckpt", 0) == \
+            {("testproject", c): 12 for c in names}
+        for c in names:
+            assert ManifestedTable(base, "testproject", c).read(spark) \
+                .count() == 12

@@ -557,6 +557,39 @@ def test_stream_epoch_jobs_do_not_grow_with_collections(spark, tmp_path,
     assert data5 - data2 <= 3, (jobs2, jobs5)
 
 
+def test_stream_manifested_epoch_jobs_same_for_five_collections_as_two(
+        spark, tmp_path, epoch_jobs):
+    """Same setup as the test above, tighter budget: the manifested
+    commit writes one parquet job per schema group, so a data epoch of
+    5 same-shape collections runs no more Spark jobs than one of 2."""
+    from rakam_api_collector_spark.streaming.committer import (
+        ErrorRateMonitor, IngestStats)
+
+    def run(name, bursts):
+        src = tmp_path / f"src_{name}"
+        _write_bursts(src, bursts)
+        stats = IngestStats()
+        epoch_jobs.clear()
+        q = start_ingest_stream(
+            spark, str(src), "fabric", Catalog(),
+            table_base=str(tmp_path / f"tables_{name}"),
+            checkpoint=str(tmp_path / f"ckpt_{name}"),
+            historical_dir=str(tmp_path / f"hist_{name}"),
+            now=NOW, shard_time=SHARD_T, dedup=True, manifested=True,
+            stats=stats, error_monitor=ErrorRateMonitor(),
+            max_files_per_trigger=1)
+        assert q.awaitTermination(120)
+        assert stats.total_records() == sum(len(b) for b in bursts)
+        return dict(epoch_jobs), _rows_by_epoch(q)
+
+    jobs2, rows2 = run("two", [_burst(2)])
+    jobs5, rows5 = run("five", [_burst(5)])
+
+    data2 = next(jobs2[e] for e, n in rows2.items() if n == 6)
+    data5 = next(jobs5[e] for e, n in rows5.items() if n == 15)
+    assert data5 <= data2, (jobs2, jobs5)
+
+
 def test_historical_drain_epoch_jobs_do_not_grow_with_collections(
         spark, tmp_path, epoch_jobs):
     """The JSON drain runs the same epoch body as the realtime stream:
@@ -725,3 +758,95 @@ def test_stream_counters_plain_and_grouped(spark, tmp_path):
                                  for c in range(3)}, layout
         assert (sum(e[1] for e in mon._events),
                 sum(e[2] for e in mon._events)) == (6, 1), layout
+
+
+# --- manifested grouped commit: replay and crash -----------------------------
+
+def test_manifested_grouped_commit_replay_and_crash(spark, tmp_path,
+                                                    monkeypatch):
+    """The grouped manifested commit keeps the epoch's batch-id replay
+    contract. A replayed epoch (its ``commits/N`` deleted) replaces
+    every collection's batch and duplicates none. An attempt that dies
+    after writing its staging dir but before renaming it leaves files
+    that ``read()``, ``format("manifest")`` and ``run_maintenance``
+    ignore, and the replay of that epoch removes them."""
+    import os
+
+    from pyspark.errors import StreamingQueryException
+
+    from rakam_api_collector_spark.datasource import ManifestDataSource
+    from rakam_api_collector_spark.manifest import (ManifestedTable,
+                                                    run_maintenance)
+
+    spark.dataSource.register(ManifestDataSource)
+    src, base = tmp_path / "src", str(tmp_path / "tables")
+    ckpt = tmp_path / "ckpt"
+    colls = [f"c{c}" for c in range(3)]
+
+    def run():
+        q = start_ingest_stream(
+            spark, str(src), "fabric", Catalog(), table_base=base,
+            checkpoint=str(ckpt), now=NOW, shard_time=SHARD_T,
+            dedup=False, manifested=True, max_files_per_trigger=1)
+        try:
+            q.awaitTermination(120)
+        except StreamingQueryException:
+            pass                            # the caller checks exception()
+        return q
+
+    def batches():
+        return {c: [(m["batch"].split("-", 1)[1], m["rows"], m["dir"])
+                    for m in ManifestedTable(base, "testproject", c)
+                    .committed()] for c in colls}
+
+    def staged():
+        root = os.path.join(base, "_staging")
+        return sorted(os.listdir(root)) if os.path.isdir(root) else []
+
+    _write_bursts(src, [_burst(3, tag="a")])
+    assert run().exception() is None
+    first = batches()
+    assert all([(b, n) for b, n, _ in v] == [("epoch-0", 3)]
+               for v in first.values()), first
+
+    # replay: drop the last commit marker, restart on the same checkpoint
+    for marker in ("0", ".0.crc"):
+        (ckpt / "commits" / marker).unlink(missing_ok=True)
+    assert run().exception() is None
+    replayed = batches()
+    for c in colls:
+        [(bid, n, pdir)] = replayed[c]
+        assert (bid, n) == ("epoch-0", 3) and pdir != first[c][0][2]
+    assert staged() == []
+
+    # crash: epoch 1 writes its staging dir, then dies before any rename
+    _write_bursts(src, [_burst(3, tag="a"), _burst(3, tag="b")])
+    def crash(*a, **kw):
+        raise RuntimeError("crash before rename")
+
+    monkeypatch.setattr(ManifestedTable, "adopt", crash)
+    assert run().exception() is not None
+    monkeypatch.undo()
+    [left] = staged()
+    assert left.split("-", 1)[1].startswith("epoch-1--")
+    assert any(f.endswith(".parquet") for _, _, fs in
+               os.walk(os.path.join(base, "_staging", left)) for f in fs)
+    for c in colls:
+        t = ManifestedTable(base, "testproject", c)
+        assert t.read(spark).count() == 3
+        assert spark.read.format("manifest").option("path", t.table_dir) \
+            .load().count() == 3
+    reports = run_maintenance(spark, base, grace_seconds=0)
+    assert sorted((r["project"], r["collection"]) for r in reports) == \
+        [("testproject", c) for c in colls]
+    assert not [r for r in reports if "error" in r]
+    assert staged() == [left]
+
+    # the replay of epoch 1 removes the staging dir and commits once
+    assert run().exception() is None
+    assert staged() == []
+    for c in colls:
+        assert [(b, n) for b, n, _ in batches()[c]] == \
+            [("epoch-0", 3), ("epoch-1", 3)]
+        assert ManifestedTable(base, "testproject", c).read(spark) \
+            .count() == 6
