@@ -129,9 +129,6 @@ class IngestResult(Mapping):
             self._views[key] = view
         return view
 
-    def __contains__(self, key) -> bool:      # without building a view
-        return key in self.orders
-
     def __iter__(self) -> Iterator[tuple[str, str]]:
         return iter(self.orders)
 

@@ -10,7 +10,10 @@ crash-visibility half on plain parquet — the version-file protocol that
 Delta (_delta_log) and Iceberg (metadata pointer) implement in full:
 
 1. Each batch writes its files under a private directory
-   ``<table>/_batches/<batch_id>/`` — invisible to readers.
+   ``<table>/_batches/<batch_id>/`` — invisible to readers. A
+   many-collection epoch may instead write every collection's files in
+   one job under ``<base>/_staging/`` and rename each collection's part
+   into its own ``_batches`` (``commit_groups``).
 2. The table state is a VERSION FILE ``<table>/_versions/v<N>.json``
    listing every live batch. Commit = atomically creating version N+1
    (``os.link`` create-if-absent — POSIX's compare-and-swap; an object

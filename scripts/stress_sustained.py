@@ -33,6 +33,10 @@ Usage: python scripts/stress_sustained.py \
            [n_per_batch] [n_batches] [n_collections] [state_partitions] \
            [maint_profile: throttled|wave]
 
+Each printed record carries an ``attestation``: the cores kept busy
+outside this process tree, and hypervisor steal, over the run
+(``perfbench.probes.LoadWindow``, bench.py's /proc/stat accounting).
+
 ``kinesis-partitioned`` / ``kafka`` run the r13 live-burst cells:
 the same n×batches workload through format("kinesis_py")
 readerMode=partitioned (mid-run shard split) or format("kafka_py")
@@ -65,6 +69,7 @@ sys.path.insert(0, "scripts")
 
 from pyspark.sql import functions as F
 
+from perfbench.probes import LoadWindow
 from rakam_api_collector_spark.ingest.catalog import Catalog
 from rakam_api_collector_spark.session import get_spark
 from rakam_api_collector_spark.streaming.pipeline import (
@@ -507,15 +512,15 @@ def run_kafka_late_loop(spark, n: int, n_batches: int, n_coll: int,
     assert checkpoint_lag(ck_hist, broker, ["hist"]) == 0
     drain_in = sum(b["rows"] for b in _progress_rows(dq))
 
-    drain_dropped = sum(_dropped(p if isinstance(p, dict)
-                                 else json.loads(p.json))
-                        for p in dq.recentProgress)
     rec = _report("kafka_late_loop_manifested" if manifested
                   else "kafka_late_loop", batches, n_batches, rt_wall,
                   total_rows=n * n_batches)
     if manifested:
         from rakam_api_collector_spark.manifest import ManifestedTable
         rt_dropped = sum(b["dropped"] for b in batches)
+        drain_dropped = sum(_dropped(p if isinstance(p, dict)
+                                     else json.loads(p.json))
+                            for p in dq.recentProgress)
         delivered = rt_stats.total_records() + hist_backlog + rt_dropped
         table_rows = sum(ManifestedTable(str(work / "tables"), p, c).rows()
                          for p, c in cat.tables())
@@ -565,39 +570,33 @@ def main() -> None:
         extra = fair_scheduler_conf()
         mode = mode[:-len("-fair")]
     spark = get_spark("stress_sustained", extra_conf=extra)
-    if mode in ("json", "both"):
-        print(json.dumps(run_json(spark, n, n_batches, n_coll,
-                                  state_partitions=sp)))
-    if mode in ("json-grouped", "both"):
-        print(json.dumps(run_json(spark, n, n_batches, n_coll,
-                                  layout="grouped",
-                                  state_partitions=sp)))
-    if mode in ("json-manifested",):
-        profile = sys.argv[6] if len(sys.argv) > 6 else "throttled"
-        print(json.dumps(run_json(spark, n, n_batches, n_coll,
-                                  state_partitions=sp,
-                                  manifested=True,
-                                  maint_profile=profile)))
-    if mode in ("avro", "both"):
-        print(json.dumps(run_avro(spark, n, n_batches, n_coll,
-                                  state_partitions=sp)))
-    if mode in ("avro-manifested",):
-        profile = sys.argv[6] if len(sys.argv) > 6 else "throttled"
-        print(json.dumps(run_avro(spark, n, n_batches, n_coll,
-                                  state_partitions=sp,
-                                  manifested=True,
-                                  maint_profile=profile)))
-    if mode in ("kinesis-partitioned",):
-        print(json.dumps(run_kinesis_partitioned(
-            spark, n, n_batches, n_coll, state_partitions=sp)))
-    if mode in ("kafka",):
-        print(json.dumps(run_kafka_py(
-            spark, n, n_batches, n_coll, state_partitions=sp)))
-    if mode in ("kafka-loop", "kafka-loop-manifested"):
-        print(json.dumps(run_kafka_late_loop(
-            spark, n, n_batches, n_coll, state_partitions=sp,
-            manifested=mode == "kafka-loop-manifested")))
+    profile = sys.argv[6] if len(sys.argv) > 6 else "throttled"
 
+    def emit(run, **kw) -> None:
+        """Print one run's record with the box-load attestation of its
+        window (cores busy outside this process tree, and steal)."""
+        load = LoadWindow()
+        rec = run(spark, n, n_batches, n_coll, state_partitions=sp, **kw)
+        rec["attestation"] = load.close()
+        print(json.dumps(rec))
+
+    if mode in ("json", "both"):
+        emit(run_json)
+    if mode in ("json-grouped", "both"):
+        emit(run_json, layout="grouped")
+    if mode in ("json-manifested",):
+        emit(run_json, manifested=True, maint_profile=profile)
+    if mode in ("avro", "both"):
+        emit(run_avro)
+    if mode in ("avro-manifested",):
+        emit(run_avro, manifested=True, maint_profile=profile)
+    if mode in ("kinesis-partitioned",):
+        emit(run_kinesis_partitioned)
+    if mode in ("kafka",):
+        emit(run_kafka_py)
+    if mode in ("kafka-loop", "kafka-loop-manifested"):
+        emit(run_kafka_late_loop,
+             manifested=mode == "kafka-loop-manifested")
 
 if __name__ == "__main__":
     main()
