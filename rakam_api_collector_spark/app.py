@@ -14,7 +14,8 @@ config dict:
                  "connector": "jar" | "python",  # python = jar-less
                  "endpoint": …, "position": …,   #   format("kinesis_py")
                  "max_records_per_shard": …},
-      "target": {"type": "parquet" | "orc", "base": …},
+      "target": {"type": "parquet", "base": …},   # every stream
+                                                  # commits parquet
       "catalog_path": …,                          # K5 metastore persistence
       "checkpoint": …,                            # ST7
       "historical": {"dir": …, "checkpoint": …},  # ST5 (optional)
@@ -32,10 +33,6 @@ config dict:
                                                   # MaintenanceHook
                                                   # kwargs; requires
                                                   # manifested)
-      "layout": "per-table" | "grouped",          # K1 sink layout (JSON
-                                                  # path): per-collection
-                                                  # dirs vs one write job
-                                                  # per schema group
       # avro-only (KafkaAvroMessageTransformer.java:33-57 hot path):
       "project": …,                               # schemas come from catalog
       "default_collection": …,                    # for type-0/1 frames
@@ -71,8 +68,16 @@ def start(spark: SparkSession, cfg: dict) -> list:
     fmt = cfg.get("format", "fabric")
     if fmt not in ("fabric", "rakam", "avro"):
         raise ValueError(f"unknown format {fmt!r}")
-    if tgt.get("type", "parquet") not in ("parquet", "orc"):
-        raise ValueError(f"unknown target type {tgt.get('type')!r}")
+    if tgt.get("type", "parquet") != "parquet":
+        # "orc" included: every stream commits parquet
+        raise ValueError(f"unknown target type {tgt.get('type')!r}: "
+                         "streams commit parquet only")
+    if "layout" in cfg:
+        # a config written for the Hive-style grouped layout: starting
+        # it would silently change the deployment's on-disk layout
+        raise ValueError("the 'layout' key is no longer supported: "
+                         "tables are per-collection dirs, and manifested "
+                         "mode already writes one job per schema group")
     if fmt == "avro" and "project" not in cfg:
         # Avro schemas come from the catalog, keyed by project — there is
         # no wire-level project field (AvroUtil.java:30-73)
@@ -198,7 +203,6 @@ def start(spark: SparkSession, cfg: dict) -> list:
         source_stream=source_stream,
         errors_dir=cfg.get("errors_dir"),
         manifested=manifested,
-        layout=cfg.get("layout", "per-table"),
         maintenance=cfg.get("maintenance"),
         state_partitions=cfg.get("state_partitions"),
         **counters()))
@@ -214,6 +218,5 @@ def start(spark: SparkSession, cfg: dict) -> list:
             source_stream=hist_stream,
             errors_dir=cfg.get("errors_dir"),
             manifested=manifested,
-            layout=cfg.get("layout", "per-table"),
             **counters()))
     return queries

@@ -94,8 +94,9 @@ def _first_wins_normalizer(df: DataFrame, col: str) -> DataFrame:
 
 class IngestResult(Mapping):
     """``{(project, collection): DataFrame}`` plus an ``unpersist()`` handle
-    for the shared parsed-batch cache the collection frames fan out from.
-    Callers that consume the frames (write, count) should call
+    for the caches the collection frames fan out from (the parsed batch
+    on the JSON path, the multi-collection decode caches on the Avro
+    path). Callers that consume the frames (write, count) should call
     ``unpersist()`` afterwards — on a long-running stream, leaked per-batch
     caches accumulate storage blocks until LRU eviction churns the pool.
 
@@ -104,17 +105,20 @@ class IngestResult(Mapping):
     its schema group's typed frame — is built only when a caller reads
     ``result[(project, collection)]``, then kept. Building one costs tens
     of ms of driver-side plan analysis, so a sink that writes the group
-    frames (``groups``) never pays it per collection."""
+    frames (``groups``) never pays it per collection. Every collection
+    sits in exactly one group: the manifested commit gives each group's
+    collections the epoch's batch id, and a second group holding the
+    same collection would replace the first's batch."""
 
     def __init__(self, orders: dict[tuple[str, str], list[str]],
-                 cached: DataFrame, groups: list | None = None):
-        self._cached = cached
+                 caches: list[DataFrame], groups: list | None = None):
+        self._caches = caches
         #: {(project, collection): [column, ...]} in catalog order
         self.orders = orders
         #: [(project, [collection, ...], group_df)] — one typed frame
-        #: per (project, schema-signature), its columns name-sorted
-        #: after a leading ``_collection``. Grouped sinks write one job
-        #: per entry instead of one per collection.
+        #: per (project, schema-signature) carrying a ``_collection``
+        #: column. Grouped sinks write one job per entry instead of one
+        #: per collection.
         self.groups = groups or []
         self._group_of = {(p, c): df for p, colls, df in self.groups
                           for c in colls}
@@ -136,7 +140,8 @@ class IngestResult(Mapping):
         return len(self.orders)
 
     def unpersist(self) -> None:
-        self._cached.unpersist()
+        for df in self._caches:
+            df.unpersist()
 
 
 def ingest_batch(spark: SparkSession, raw: DataFrame, fmt: str,
@@ -250,7 +255,7 @@ def ingest_batch(spark: SparkSession, raw: DataFrame, fmt: str,
         groups.append((project, list(collections), typed_g))
     orders = {(p, c): [f.name for f in resolved[(p, c)]]
               for p, colls, _ in groups for c in colls}
-    return IngestResult(orders, parsed, groups)
+    return IngestResult(orders, [parsed], groups)
 
 
 def _discover_new_fields(parsed: DataFrame, catalog: Catalog,

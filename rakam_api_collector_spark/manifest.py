@@ -517,8 +517,20 @@ def run_maintenance(spark: SparkSession, base: str,
     rebuilds an index (that is the index maintainer's single-writer
     window); a due rebuild is the operator's or the ANN stream's
     (``on_drift="rebuild"``) to run. Errors are isolated per root,
-    like per-table errors."""
+    like per-table errors.
+
+    The sweep also deletes every ``base/_staging`` dir (a
+    ``commit_groups`` attempt that died and was never replayed) older
+    than ``grace_seconds`` — the grace gc() gives in-flight batch dirs,
+    so a live epoch's staging dir survives."""
     meta = meta or LocalMetadataStore()
+    staging, now = f"{base}/{STAGING_DIR}", time.time()
+    for d in meta.list(staging):
+        try:
+            if now - meta.mtime(f"{staging}/{d}") >= grace_seconds:
+                meta.delete_tree(f"{staging}/{d}")
+        except FileNotFoundError:
+            continue                     # a concurrent sweep won
     tables = []
     for proj in sorted(meta.list(base)):
         pdir = os.path.join(base, proj)
@@ -1918,8 +1930,9 @@ class ManifestedTable:
 
         self._commit(lambda live: live, extra=ext)
 
-    def _enforce_constraints(self, df: DataFrame,
-                             pinned: bool = False) -> DataFrame:
+    def _enforce_constraints(self, df: DataFrame, pinned: bool = False,
+                             cons: dict[str, str] | None = None
+                             ) -> DataFrame:
         """Refuse the frame if any row evaluates a CHECK constraint to
         FALSE. Returns the frame the caller must WRITE: when
         constraints exist the input is localCheckpointed first, so the
@@ -1932,8 +1945,10 @@ class ManifestedTable:
         sum per constraint), so N constraints cost one batch scan, not
         N — Delta fuses the check into the write job; a single bounded
         pre-pass keeps the refused-batch-leaves-no-orphan property
-        instead."""
-        cons = self.constraints
+        instead. ``cons`` is the constraint map when the caller already
+        read the table's version."""
+        if cons is None:
+            cons = self.constraints
         if not cons:
             return df
         if not pinned:
@@ -2504,8 +2519,9 @@ def commit_groups(base: str, groups: list,
                   batch_id: str) -> dict[tuple[str, str], int]:
     """Commit batch ``batch_id`` to every collection of ``groups`` —
     ``[(project, [collection, ...], frame)]``, each frame carrying a
-    ``_collection`` column and only those collections' rows — with ONE
-    parquet write per group instead of one per collection.
+    ``_collection`` column and only those collections' rows, each
+    collection in one group — with ONE parquet write per group instead
+    of one per collection.
 
     Each group frame is written once under the local staging dir
     ``base/_staging/<batch_id>--<uuid8>/<group>``, hash-partitioned
@@ -2518,12 +2534,21 @@ def commit_groups(base: str, groups: list,
     rewrites see the usual layout. The entry schema is the collection's
     column order from ``orders`` plus ``_day``.
 
+    Each table's current version is read once, for both the add-only
+    schema check and its CHECK constraints. The constraints are
+    evaluated after every group write and before any rename, over the
+    collection's staged files, so the rows checked are exactly the rows
+    committed. A violation deletes the staging dir and raises
+    ``ConstraintViolation``; no collection is committed.
+
     A failed attempt leaves its staging dir behind; nothing reads
-    ``_staging`` (readers follow manifests, and the maintenance sweep
-    only visits dirs holding ``_versions``), and the replay of the same
-    ``batch_id`` deletes it before writing. Returns
+    ``_staging`` (readers follow manifests), the replay of the same
+    ``batch_id`` deletes it before writing, and ``run_maintenance``
+    deletes it once it is older than the sweep's grace. Returns
     ``{(project, collection): rows committed}``."""
     from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.sql import types as T
 
     from rakam_api_collector_spark.sinks import _grouped_writer_frame
 
@@ -2551,24 +2576,38 @@ def commit_groups(base: str, groups: list,
         staged = []
         for i, c in enumerate(collections, 1):
             table = ManifestedTable(base, project, c)
+            state = table._read_version(table.current_version())
             schema = {"type": "struct", "fields": [
                 fields[n] for n in orders[(project, c)] + parts[1:]]}
             # fail fast before writing, as write() does
-            table._check_evolution(table.committed(), schema["fields"],
+            table._check_evolution(state["batches"], schema["fields"],
                                    replacing=batch_id)
-            staged.append(((project, c), table,
-                           f"{stage}/{gi}/{ci}={i}", schema))
-        (_grouped_writer_frame(out, parts, 0).write.mode("overwrite")
+            staged.append(((project, c), table, f"{stage}/{gi}/{ci}={i}",
+                           schema, state.get("constraints")))
+        (_grouped_writer_frame(out, parts).write.mode("overwrite")
          .partitionBy(*parts).parquet(f"{stage}/{gi}"))
         return staged
 
+    def check(item) -> None:
+        _, table, path, schema, cons = item
+        if cons and os.path.isdir(path):     # no dir: zero rows pass
+            spark = groups[0][2].sparkSession
+            rows = spark.read.schema(T.StructType.fromJson(schema)) \
+                .parquet(path)
+            table._enforce_constraints(rows, pinned=True, cons=cons)
+
     def adopt(item) -> tuple[tuple[str, str], int]:
-        key, table, path, schema = item
+        key, table, path, schema, _ = item
         return key, table.adopt(path, batch_id, schema)["rows"]
 
     with ThreadPoolExecutor(16) as pool:
         staged = [s for group in pool.map(write_group, enumerate(groups))
                   for s in group]
+        try:
+            list(pool.map(check, staged))
+        except ConstraintViolation:
+            meta.delete_tree(stage)
+            raise
         committed = dict(pool.map(adopt, staged))
     if meta.is_dir(stage):
         meta.delete_tree(stage)

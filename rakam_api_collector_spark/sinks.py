@@ -24,9 +24,9 @@ the multi-writer / crash-visibility half, ``manifest.ManifestedTable``
 implements the same protocol on plain parquet: private batch dirs, a
 version-file commit (atomic create-if-absent as compare-and-swap,
 optimistic-concurrency retries), idempotent batch ids, orphan
-invisibility, transactional compaction, and version-retention GC. On a cluster a transactional table format
-(Delta/Iceberg, ``.format("delta")`` is a drop-in) implements the full
-version of the same idea.
+invisibility, transactional compaction, and version-retention GC. On a
+cluster a transactional table format (Delta/Iceberg, ``.format("delta")``
+is a drop-in) implements the full version of the same idea.
 """
 
 from __future__ import annotations
@@ -163,113 +163,19 @@ def write_collections(tables: dict[tuple[str, str], DataFrame], base: str,
         return dict(pool.map(write_one, tables.items()))
 
 
-def write_collections_grouped(result, base: str, fmt: str = "parquet",
-                              partition_by_day: bool = True,
-                              max_records_per_file: int = SHARD_MAX_ROWS,
-                              writer_tasks: int | None = 0,
-                              ) -> dict[tuple[str, str], int]:
-    """Write an ``IngestResult`` as ONE job per (project, schema-group)
-    instead of one per collection: the group frame (which carries
-    ``_collection``) writes with dynamic partitioning on
-    ``(_collection, _day)`` under ``base/project/``.
-
-    At 100 same-shape collections per micro-batch this is 1 write job
-    vs 100 — job-scheduling and commit overhead scale with #distinct
-    schemas. The directory layout becomes Hive-partition style
-    (``base/project/_collection=x/_day=y``); ``read_collection_grouped``
-    reads it back with partition pruning, so a per-collection read
-    still scans only that collection's files. Choose this layout for
-    many-small-collections streams; the per-table layout
-    (``write_collections``) when downstream consumers expect
-    ``base/project/collection`` directories.
-
-    ``writer_tasks`` picks the shuffle that feeds the dynamic-
-    partition write. Without any shuffle every task opens a writer
-    per (_collection, _day) combo it sees — T tasks × P combos file
-    handles and T×P output files. The choice of shuffle is a regime
-    question (r10 measurement):
-
-    - ``writer_tasks=N>0`` → ``repartition(N, keys)``: N-way write
-      fan-out regardless of byte size. This is the MICRO-BATCH
-      regime: a 30k-row batch is far below AQE's advisory partition
-      size, so a rebalance hint coalesces it to ONE post-shuffle
-      task that writes all ~100 partition dirs serially (measured
-      1 task / 2.4-4.1 s vs 32 tasks / 0.8-1.0 s — the whole
-      grouped-layout streaming-budget miss of r8/r9).
-    - ``writer_tasks=None`` → the AQE ``rebalance`` hint: size-
-      targeted partitions that SPLIT a skewed combo across tasks.
-      This is the BULK regime (backfill/compaction) where combos
-      carry enough bytes that advisory sizing engages and a
-      straggling hot combo matters more than task count.
-    - ``writer_tasks=0`` (default) → ``repartition(
-      defaultParallelism, keys)`` — the micro-batch regime with the
-      session's core count.
-
-    Either way each combo lands in a bounded number of tasks, so
-    files scale with #combos and maxRecordsPerFile, not #tasks.
-
-    Returns ``{(project, collection): rows written}`` from one
-    Observation per group write: a ``count_if`` per collection rides
-    the group's single job."""
-    from pyspark.sql import Observation
-
-    counts: dict[tuple[str, str], int] = {}
-    for project, collections, df in result.groups:
-        obs = Observation()
-        out = df.observe(obs, *[
-            F.count_if(F.col("_collection") == c).alias(f"n{i}")
-            for i, c in enumerate(collections)])
-        if partition_by_day and "_time" in df.columns:
-            out = out.withColumn("_day", F.to_date("_time"))
-            parts = ["_collection", "_day"]
-        else:
-            parts = ["_collection"]
-        out = _grouped_writer_frame(out, parts, writer_tasks)
-        (out.write.mode("append").format(fmt)
-         .option("compression", "snappy")
-         .option("maxRecordsPerFile", max_records_per_file)
-         .partitionBy(*parts)
-         .save(f"{base}/{project}"))
-        got = obs.get
-        counts.update(((project, c), got[f"n{i}"])
-                      for i, c in enumerate(collections))
-    return counts
-
-
-def _grouped_writer_frame(out: DataFrame, parts: list[str],
-                          writer_tasks: int | None) -> DataFrame:
-    """The shuffle that feeds the grouped dynamic-partition write,
-    exposed so tests can pin its plan shape (test_plans.py): the
-    micro-batch regime MUST be a fixed-N hash repartition on the
-    partition keys — AQE never coalesces a user repartition with an
-    explicit numPartitions — while the bulk regime opts in to the AQE
-    rebalance hint, whose advisory sizing WOULD coalesce a 30k-row
-    micro-batch into one serial writer task (the r8/r9 budget miss)."""
-    if writer_tasks is None:
-        return out.hint("rebalance", *parts)
-    n = (writer_tasks or
-         out.sparkSession.sparkContext.defaultParallelism)
+def _grouped_writer_frame(out: DataFrame, parts: list[str]) -> DataFrame:
+    """The shuffle that feeds a grouped dynamic-partition write
+    (``manifest.commit_groups``): a hash repartition on the partition
+    keys into ``defaultParallelism`` tasks. Without a shuffle every
+    task opens a writer per key combination it sees (T tasks × P combos
+    files); with it each combo lands in one task, so files scale with
+    combos. The count is fixed because AQE never coalesces a user
+    repartition with an explicit numPartitions, while a ``rebalance``
+    hint's advisory sizing would coalesce a 30k-row micro-batch into
+    ONE serial writer task (measured 1 task / 2.4-4.1 s vs 32 tasks /
+    0.8-1.0 s). Exposed so tests can pin the plan (test_plans.py)."""
+    n = out.sparkSession.sparkContext.defaultParallelism
     return out.repartition(n, *parts)
-
-
-def read_collection_grouped(spark: SparkSession, base: str, project: str,
-                            collection: str, catalog: Catalog) -> DataFrame:
-    """Read one collection from the grouped (Hive-partitioned) layout:
-    the ``_collection`` filter prunes to that partition's files before
-    any row is read (pinned in tests/test_sinks.py). Columns re-project
-    to catalog order with null-fill, as in ``read_collection``."""
-    df = (spark.read.option("mergeSchema", "true")
-          .option("basePath", f"{base}/{project}")
-          .parquet(f"{base}/{project}")
-          .filter(F.col("_collection") == collection))
-    cols = catalog.get_columns(project, collection) or []
-    exprs = []
-    for f in cols:
-        if f.name in df.columns:
-            exprs.append(F.col(f.name))
-        else:
-            exprs.append(F.lit(None).cast(f.dataType).alias(f.name))
-    return df.select(*exprs)
 
 
 def read_collection(spark: SparkSession, base: str, project: str,

@@ -15,7 +15,8 @@ Spark Structured Streaming:
 - ST3/ST4 late split → latesplit.split_late inside ``foreachBatch``;
   the historical Kafka topic (K3) becomes a spool directory drained by a
   second slow-trigger query (ST5/S2, KafkaHistoricalWorker.java:157-219).
-- R1 fan-out + K1/K5 → ingest_batch + write_collections per micro-batch.
+- R1 fan-out + K1/K5 → the decoder's schema-group frames + one commit
+  per micro-batch (``_commit_tables``).
 - ST7 checkpoint → ``checkpointLocation`` (stronger than the reference's
   commitSync: file-sink commits are exactly-once).
 - ST8 backpressure / ST9 retry / ST10 limiter → Spark-native (unified
@@ -48,9 +49,12 @@ publish. The stages run in this order:
    never re-publishes — nor drops — a late record. The handoff runs
    before the commit (BatchRecords.java:44-67). Without a K3 channel
    late records stay hot.
-5. decode → ``_shard_time`` backfill → ``_commit_tables`` →
-   ``maint_hook.after_epoch`` → ``_account`` (A2 counters and the ST11
-   kill-switch, from the rows each commit wrote).
+5. decode: the starter's decoder (``ingest_batch`` or
+   ``_decode_avro_frames``) returns an ``IngestResult`` of schema-group
+   frames with ``_shard_time`` already set.
+6. commit: ``_commit_tables`` writes the epoch under its batch id.
+7. ``maint_hook.after_epoch``, then ``_account`` (A2 counters and the
+   ST11 kill-switch, from the rows the commit wrote).
 
 The file source here stands in for Kafka: swap
 ``spark.readStream.format("kafka")…selectExpr("CAST(value AS STRING)")``
@@ -64,10 +68,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from rakam_api_collector_spark.ingest.batch import FORMATS, ingest_batch
+from rakam_api_collector_spark.ingest.batch import (FORMATS, IngestResult,
+                                                    ingest_batch)
 from rakam_api_collector_spark.ingest.catalog import Catalog
-from rakam_api_collector_spark.sinks import (write_collections,
-                                             write_collections_grouped)
+from rakam_api_collector_spark.sinks import write_collections
 from rakam_api_collector_spark.streaming.latesplit import (realtime_days,
                                                            split_late)
 
@@ -220,23 +224,6 @@ def _dedup(stream: DataFrame, user: Column, time_key: Column) -> DataFrame:
             .dropDuplicatesWithinWatermark(["_dk_user", "_dk_time"]))
 
 
-def _check_layout(layout: str, manifested: bool) -> None:
-    """Refuse, at start time, a layout the sink cannot serve.
-    ``layout="grouped"`` stays refused with ``manifested=True`` because
-    the on-disk layouts differ: the grouped sink appends Hive-style
-    ``base/project/_collection=…/_day=…`` dirs, a manifested table is
-    ``base/project/collection`` with ``_batches`` and ``_versions``.
-    Manifested commits already write once per schema group
-    (``_commit_tables``), so the option would buy nothing there."""
-    if layout not in ("per-table", "grouped"):
-        raise ValueError(f"unknown layout {layout!r}: "
-                         "expected 'per-table' or 'grouped'")
-    if layout == "grouped" and manifested:
-        raise ValueError("layout='grouped' and manifested=True are "
-                         "incompatible — the manifest commit protocol "
-                         "keeps per-collection table dirs")
-
-
 _EPOCH_FILE_RETAIN = 128
 
 
@@ -331,51 +318,32 @@ def _pinned_epoch_date(spark: SparkSession, checkpoint: str,
 
 
 def _commit_tables(tables, table_base: str, manifested: bool,
-                   checkpoint: str, epoch_id: int,
-                   layout: str = "per-table") -> dict[tuple[str, str], int]:
+                   checkpoint: str, epoch_id: int
+                   ) -> dict[tuple[str, str], int]:
     """Per-micro-batch table commit. Plain mode appends via
     write_collections; manifested mode commits each collection through
     the version-file protocol with a (checkpoint-namespace, epoch)
     idempotency key — a replayed foreachBatch from the SAME checkpoint
     replaces its batch, while a fresh checkpoint (new incarnation, or
-    the drain's own checkpoint) or a second query appends.
-    Per-collection commits overlap from a thread pool either way
-    (manifest.py; RaptorDatabaseHandler.java:312-339).
+    the drain's own checkpoint) or a second query appends
+    (RaptorDatabaseHandler.java:312-339).
 
-    Manifested mode writes ONE parquet job per (project, schema group)
-    when ``tables`` carries ``.groups`` (the JSON ingest result):
-    ``manifest.commit_groups`` stages each group frame under the table
-    base, renames every collection's part into its table's
-    ``_batches`` and commits it there, so the epoch's write jobs scale
-    with schema groups, not collections. Three cases keep the
-    per-collection ``ManifestedTable.write``:
-
-    - a table with CHECK constraints (its write checks a
-      localCheckpoint of exactly the rows it persists);
-    - a table base with a URI scheme (on an object store a rename is a
-      copy);
-    - a result without ``.groups`` (the Avro decoders).
-
-    ``layout="grouped"`` commits ONE write job per (project,
-    schema-group) via ``write_collections_grouped`` (Hive-style
-    ``_collection=…/_day=…`` partitions) — the plain sink whose job
-    count scales with #schemas, not #collections. Requires a result
-    carrying ``.groups`` (the JSON ingest path); the starters refuse it
-    with ``manifested`` (``_check_layout``).
+    Manifested mode has two paths. A result carrying ``.groups`` (what
+    ``ingest_batch`` and ``_decode_avro_frames`` return) on a local
+    table base goes through ``manifest.commit_groups``: ONE parquet job
+    per (project, schema group) into a staging dir, CHECK constraints
+    checked on the staged files, then every collection's part renamed
+    into its table's ``_batches`` and committed there, so the epoch's
+    write jobs scale with schema groups, not collections. A table base
+    with a URI scheme keeps the per-collection ``ManifestedTable.write``
+    from a thread pool, because on an object store a rename is a copy;
+    so does a result without ``.groups`` (a plain dict).
 
     Returns ``{(project, collection): rows written}``, read from what
     the commit wrote rather than counted again: the manifest entry's
     footer-summed ``rows`` in manifested mode, an Observation riding
-    each write in the plain and grouped modes. The A2/ST11 counters
-    (``_account``) read it, so they cost no per-collection job."""
-    if layout == "grouped":
-        if len(tables) == 0:        # nothing hot to commit
-            return {}
-        if not getattr(tables, "groups", None):
-            raise ValueError("layout='grouped' needs an IngestResult "
-                             "with schema-group frames (JSON ingest "
-                             "path)")
-        return write_collections_grouped(tables, table_base)
+    each write in plain mode. The A2/ST11 counters (``_account``) read
+    it, so they cost no per-collection job."""
     if not manifested:
         return write_collections(tables, table_base)
     from concurrent.futures import ThreadPoolExecutor
@@ -385,34 +353,18 @@ def _commit_tables(tables, table_base: str, manifested: bool,
     from rakam_api_collector_spark.manifest import (ManifestedTable,
                                                     commit_groups)
     bid = f"{_md5(checkpoint.encode()).hexdigest()[:8]}-epoch-{epoch_id}"
-    groups = getattr(tables, "groups", None) or []
-    if groups and not urlparse(table_base).scheme:
-        per_table = {key for key in tables
-                     if ManifestedTable(table_base, *key).constraints}
-    else:
-        per_table, groups = set(tables), []
+    if hasattr(tables, "groups") and not urlparse(table_base).scheme:
+        return commit_groups(table_base, tables.groups, tables.orders, bid)
 
     def commit_one(key):
         table = ManifestedTable(table_base, *key)
         table.write(tables[key], batch_id=bid)
         return key, table.last_entry["rows"]
 
-    if len(per_table) <= 1:
-        committed = dict(map(commit_one, per_table))
-    else:
-        with ThreadPoolExecutor(min(16, len(per_table))) as pool:
-            committed = dict(pool.map(commit_one, per_table))
-    grouped = []
-    for project, collections, df in groups:
-        kept = [c for c in collections if (project, c) not in per_table]
-        if len(kept) < len(collections):
-            df = df.filter(F.col("_collection").isin(kept))
-        if kept:
-            grouped.append((project, kept, df))
-    if grouped:
-        committed.update(commit_groups(table_base, grouped, tables.orders,
-                                       bid))
-    return committed
+    if len(tables) <= 1:
+        return dict(map(commit_one, tables))
+    with ThreadPoolExecutor(min(16, len(tables))) as pool:
+        return dict(pool.map(commit_one, tables))
 
 
 def _account(committed: dict[tuple[str, str], int], failed: int,
@@ -437,8 +389,7 @@ def _account(committed: dict[tuple[str, str], int], failed: int,
 
 def _start_epochs(spark: SparkSession, stream: DataFrame, checkpoint: str,
                   trigger: dict | None, decode, *, count_drops: bool,
-                  table_base: str, manifested: bool,
-                  layout: str = "per-table", shard_time=None, publish=None,
+                  table_base: str, manifested: bool, publish=None,
                   now=None, outdated_day_index: int = 1, meta_store=None,
                   errors_dir: str | None = None, name: str = "realtime",
                   maint_hook=None, stats=None, error_monitor=None):
@@ -447,12 +398,12 @@ def _start_epochs(spark: SparkSession, stream: DataFrame, checkpoint: str,
     returns the StreamingQuery with ``maintenance``, ``stats`` and
     ``error_monitor`` attached.
 
-    ``decode(hot)`` returns the epoch's ``{(project, collection): df}``
-    with an ``unpersist()``; ``publish(late)`` is the K3 channel, given
-    the late rows' ``value``. ST11 fails the rejected rows, plus — with
-    ``count_drops`` — the hot rows the decoder did not commit (JSON: the
-    parser drops what it cannot route; an Avro bulk pointer expands to
-    many rows, so there only corrupt frames count)."""
+    ``decode(hot)`` returns the epoch's ``IngestResult``;
+    ``publish(late)`` is the K3 channel, given the late rows' ``value``.
+    ST11 fails the rejected rows, plus — with ``count_drops`` — the hot
+    rows the decoder did not commit (JSON: the parser drops what it
+    cannot route; an Avro bulk pointer expands to many rows, so there
+    only corrupt frames count)."""
     label = F.col("_label")
 
     def process(batch: DataFrame, epoch_id: int) -> None:
@@ -491,14 +442,9 @@ def _start_epochs(spark: SparkSession, stream: DataFrame, checkpoint: str,
                     # unsplit rows (Avro bulk pointers) stay hot
                     rt = rt.unionByName(hot.filter(label != _STREAM))
                 hot = rt
-            tables = decode(hot)            # 5. decode → commit → account
-            out = tables
-            if shard_time is not None:
-                out = {k: df.withColumn("_shard_time", F.coalesce(
-                    "_shard_time", F.lit(shard_time).cast("timestamp")))
-                    for k, df in tables.items()}
-            committed = _commit_tables(out, table_base, manifested,
-                                       checkpoint, epoch_id, layout=layout)
+            tables = decode(hot)            # 5.-7. decode, commit, account
+            committed = _commit_tables(tables, table_base, manifested,
+                                       checkpoint, epoch_id)
             if maint_hook is not None:
                 maint_hook.after_epoch(epoch_id)
             failed = n_bad + (max(n_hot - sum(committed.values()), 0)
@@ -532,7 +478,6 @@ def start_ingest_stream(spark: SparkSession, source_dir: str, fmt: str,
                         historical_producer=None,
                         errors_dir: str | None = None,
                         manifested: bool = False,
-                        layout: str = "per-table",
                         maintenance: dict | None = None,
                         state_partitions: int | None = None,
                         meta_store=None):
@@ -574,16 +519,9 @@ def start_ingest_stream(spark: SparkSession, source_dir: str, fmt: str,
     ``{"every_epochs": 16, "min_batches": 8}``), exposed as
     ``query.maintenance``.
 
-    ``layout="grouped"`` commits one write job per (project,
-    schema-group) instead of one per collection (see ``_commit_tables``
-    / ``sinks.write_collections_grouped``); read back with
-    ``sinks.read_collection_grouped``. Pick it for
-    many-small-collections streams (the reference stress shape).
-
     ``stats`` (``committer.IngestStats``, A2) and ``error_monitor``
     (``committer.ErrorRateMonitor``, ST11) are exposed on the query as
     ``query.stats`` / ``query.error_monitor``."""
-    _check_layout(layout, manifested)
     if historical_producer is not None and historical_dir is not None:
         raise ValueError(
             "pass historical_producer OR historical_dir, not both — "
@@ -618,33 +556,20 @@ def start_ingest_stream(spark: SparkSession, source_dir: str, fmt: str,
                                  shard_time=shard_time,
                                  time_field=TIME_FIELD),
         count_drops=True, table_base=table_base, manifested=manifested,
-        layout=layout, publish=publish, now=now,
+        publish=publish, now=now,
         outdated_day_index=outdated_day_index, meta_store=meta_store,
         errors_dir=errors_dir, maint_hook=maint_hook, stats=stats,
         error_monitor=error_monitor)
 
 
-class AvroBatchResult(dict):
-    """``{(project, collection): DataFrame}`` plus an ``unpersist()``
-    handle over the per-schema-group decoded caches — the Avro analog
-    of ingest.batch.IngestResult (leaked per-batch caches accumulate
-    forever on a long-running stream)."""
-
-    def __init__(self, *a, **kw) -> None:
-        super().__init__(*a, **kw)
-        self._caches: list[DataFrame] = []
-
-    def unpersist(self) -> None:
-        for df in self._caches:
-            df.unpersist()
-
-
 def _decode_avro_frames(spark: SparkSession, frames: DataFrame,
                         get_columns, project: str,
                         default_collection: str | None,
-                        bulk_base: str | None) -> AvroBatchResult:
+                        bulk_base: str | None,
+                        shard_time=None) -> IngestResult:
     """Typed tables from one micro-batch of routed Avro frames
-    (columns ``_kind, _collection, value``).
+    (columns ``_kind, _collection, value``), as an ``IngestResult``
+    whose groups the manifested commit writes once each.
 
     Collections are grouped by SCHEMA SIGNATURE and each group decodes
     in ONE mapInPandas pass (the decoder emits ``_collection`` in-band,
@@ -652,7 +577,11 @@ def _decode_avro_frames(spark: SparkSession, frames: DataFrame,
     frame) — plans scale with #schemas, not #collections, exactly the
     R1 fan-out rule the JSON path follows (ingest/batch.py). A
     100-collection micro-batch is 1 Python pass + 100 cheap filters,
-    not 100 Python passes.
+    not 100 Python passes. Bulk rows get a literal ``_collection`` and
+    join their collection's stream group, or form a one-collection
+    group, so every collection sits in exactly one group. A null
+    ``_shard_time`` takes ``shard_time`` (P1), as ``ingest_batch``
+    sets it on the JSON path.
 
     Only collection NAMES and bulk POINTERS reach the driver (both
     bounded: #collections, #pointed-to objects per batch — each pointer
@@ -664,19 +593,21 @@ def _decode_avro_frames(spark: SparkSession, frames: DataFrame,
         bulk_collections, decode_bulk_collection, decode_stream_records,
         parse_bulk_pointer, read_bulk_objects)
 
-    tables = AvroBatchResult()
+    caches: list[DataFrame] = []
+    groups: list[tuple[str, list[str], DataFrame]] = []
+    orders: dict[tuple[str, str], list[str]] = {}
 
     colls = [r[0] for r in (frames.filter(F.col("_kind") == "stream")
                             .select("_collection").distinct().collect())]
-    groups: dict[tuple, list[str]] = {}
+    by_sig: dict[tuple, list[str]] = {}
     for coll in sorted(c for c in colls if c is not None):
         fields = get_columns(project, coll)
         if fields is None:
             continue
         sig = tuple((f.name, f.dataType.simpleString()) for f in fields)
-        groups.setdefault(sig, []).append(coll)
+        by_sig.setdefault(sig, []).append(coll)
 
-    for sig, group in groups.items():
+    for group in by_sig.values():
         fields = get_columns(project, group[0])
         typed = decode_stream_records(
             frames.filter((F.col("_kind") == "stream")
@@ -684,15 +615,14 @@ def _decode_avro_frames(spark: SparkSession, frames: DataFrame,
             .select("value"),
             fields, default_collection=default_collection)
         if len(group) > 1:
-            # cache the group's single decode so the per-collection
-            # writes don't re-run the Python stage (the JSON path
-            # caches its parsed batch the same way, batch.py:166)
+            # cache the group's single decode so per-collection reads
+            # don't re-run the Python stage (the JSON path caches its
+            # parsed batch the same way)
             typed = typed.cache()
-            tables._caches.append(typed)
-        names = [f.name for f in fields]
-        for coll in group:
-            tables[(project, coll)] = (
-                typed.filter(F.col("_collection") == coll).select(*names))
+            caches.append(typed)
+        groups.append((project, group, typed))
+        orders.update(((project, c), [f.name for f in fields])
+                      for c in group)
 
     ptrs = (frames.filter(F.col("_kind") == "bulk")
             .select("value").collect())
@@ -703,13 +633,23 @@ def _decode_avro_frames(spark: SparkSession, frames: DataFrame,
         paths = [f"{bulk_base}/{parse_bulk_pointer(bytes(r.value))[1]}"
                  for r in ptrs]
         objects = read_bulk_objects(spark, paths)
+        at = {(p, c): i for i, (p, cs, _) in enumerate(groups) for c in cs}
         for p, c in bulk_collections(objects, get_columns):
-            typed = decode_bulk_collection(objects, p, c, get_columns)
-            if (p, c) in tables:
-                tables[(p, c)] = tables[(p, c)].unionByName(typed)
+            typed = decode_bulk_collection(objects, p, c, get_columns) \
+                .select(F.lit(c).alias("_collection"), "*")
+            i = at.get((p, c))
+            if i is None:
+                groups.append((p, [c], typed))
+                orders[(p, c)] = [f.name for f in get_columns(p, c)]
             else:
-                tables[(p, c)] = typed
-    return tables
+                _, cs, df = groups[i]
+                groups[i] = (p, cs, df.unionByName(typed))
+
+    if shard_time is not None:
+        groups = [(p, cs, df.withColumn("_shard_time", F.coalesce(
+            "_shard_time", F.lit(shard_time).cast("timestamp"))))
+            for p, cs, df in groups]
+    return IngestResult(orders, caches, groups)
 
 
 def start_avro_ingest_stream(spark: SparkSession, source_dir: str | None,
@@ -784,9 +724,9 @@ def start_avro_ingest_stream(spark: SparkSession, source_dir: str | None,
         checkpoint, trigger,
         lambda hot: _decode_avro_frames(spark, hot, catalog.get_columns,
                                         project, default_collection,
-                                        bulk_base),
+                                        bulk_base, shard_time),
         count_drops=False, table_base=table_base, manifested=manifested,
-        shard_time=shard_time, publish=publish, now=now,
+        publish=publish, now=now,
         outdated_day_index=outdated_day_index, meta_store=meta_store,
         errors_dir=errors_dir, maint_hook=maint_hook, stats=stats,
         error_monitor=error_monitor)
@@ -833,9 +773,9 @@ def start_avro_historical_stream(spark: SparkSession, historical_dir: str,
         checkpoint, trigger,
         lambda hot: _decode_avro_frames(spark, hot, catalog.get_columns,
                                         project, default_collection,
-                                        bulk_base),
+                                        bulk_base, shard_time),
         count_drops=False, table_base=table_base, manifested=manifested,
-        shard_time=shard_time, errors_dir=errors_dir, name="historical",
+        errors_dir=errors_dir, name="historical",
         stats=stats, error_monitor=error_monitor)
 
 
@@ -846,7 +786,6 @@ def start_historical_stream(spark: SparkSession, historical_dir: str | None,
                             source_stream: DataFrame | None = None,
                             errors_dir: str | None = None,
                             manifested: bool = False,
-                            layout: str = "per-table",
                             stats=None, error_monitor=None):
     """ST5: drain the historical spool in big, low-frequency batches
     (reference: 30 min cadence or 500k-record lag,
@@ -856,9 +795,8 @@ def start_historical_stream(spark: SparkSession, historical_dir: str | None,
     ``sources.kafka.historical_reader(...).load()``) for the spool dir;
     such a topic can carry envelopes the parser would drop, so
     ``errors_dir`` and ``error_monitor`` treat them as on the realtime
-    path. ``manifested`` and ``layout`` must match the realtime
-    stream's, so drained rows land in the tables its readers read."""
-    _check_layout(layout, manifested)
+    path. ``manifested`` must match the realtime stream's, so drained
+    rows land in the tables its readers read."""
     if source_stream is not None:
         raw = source_stream.select(
             F.col("value").cast("string").alias("value"))
@@ -873,5 +811,5 @@ def start_historical_stream(spark: SparkSession, historical_dir: str | None,
                                  shard_time=shard_time,
                                  time_field=TIME_FIELD),
         count_drops=True, table_base=table_base, manifested=manifested,
-        layout=layout, errors_dir=errors_dir, name="historical",
+        errors_dir=errors_dir, name="historical",
         stats=stats, error_monitor=error_monitor)

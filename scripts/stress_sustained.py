@@ -27,7 +27,7 @@ commit overhead at ~1k keys each; 8 cut the steady batch wall 25-26 s
 to override (0 = leave the session default).
 
 Usage: python scripts/stress_sustained.py \
-           [json|json-grouped|json-manifested[-fair]|avro|
+           [json|json-manifested[-fair]|avro|
             avro-manifested[-fair]|both|kinesis-partitioned|kafka|
             kafka-loop|kafka-loop-manifested] \
            [n_per_batch] [n_batches] [n_collections] [state_partitions] \
@@ -124,7 +124,6 @@ def _report(name: str, batches: list[dict], n_batches: int,
 
 
 def run_json(spark, n: int, n_batches: int, n_coll: int,
-             layout: str = "per-table",
              state_partitions: int | None = 4,
              manifested: bool = False,
              maint_profile: str = "throttled") -> dict:
@@ -163,15 +162,13 @@ def run_json(spark, n: int, n_batches: int, n_coll: int,
         spark, str(src), "fabric", Catalog(),
         table_base=str(work / "tables"),
         checkpoint=str(work / "ckpt"),
-        now=NOW, shard_time=SHARD_T, dedup=True, layout=layout,
+        now=NOW, shard_time=SHARD_T, dedup=True,
         trigger={"availableNow": True}, max_files_per_trigger=1,
         state_partitions=state_partitions,
         manifested=manifested, maintenance=maint)
     q.awaitTermination(1200)
     wall = time.perf_counter() - t0
-    name = "json" if layout == "per-table" else f"json_{layout}"
-    if manifested:
-        name = "json_manifested"
+    name = "json_manifested" if manifested else "json"
     rec = _report(name, _progress_rows(q), n_batches, wall)
     if manifested and q.maintenance is not None:
         q.maintenance.wait(120)
@@ -582,8 +579,6 @@ def main() -> None:
 
     if mode in ("json", "both"):
         emit(run_json)
-    if mode in ("json-grouped", "both"):
-        emit(run_json, layout="grouped")
     if mode in ("json-manifested",):
         emit(run_json, manifested=True, maint_profile=profile)
     if mode in ("avro", "both"):

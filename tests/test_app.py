@@ -85,6 +85,10 @@ def test_bad_config_rejected(spark, tmp_path):
         app.start(spark, {**base, "source": {"type": "pulsar"}})
     with pytest.raises(ValueError, match="unknown target"):
         app.start(spark, {**base, "target": {"type": "delta", "base": "x"}})
+    with pytest.raises(ValueError, match="unknown target type 'orc'"):
+        app.start(spark, {**base, "target": {"type": "orc", "base": "x"}})
+    with pytest.raises(ValueError, match="'layout'"):
+        app.start(spark, {**base, "layout": "grouped"})
 
 
 def test_kafka_source_gated(spark, tmp_path):
@@ -255,39 +259,6 @@ def test_manifested_app_with_historical_drain_exactly_once(spark, tmp_path):
     assert users() == want
     # nothing was appended outside the version protocol
     assert not list((tmp_path / "tables" / "p" / "ev").glob("_day=*"))
-
-
-def test_grouped_app_with_historical_drain(spark, tmp_path):
-    """layout='grouped' + historical: the drain writes the grouped
-    layout too, so read_collection_grouped sees realtime and drained
-    rows alike."""
-    from rakam_api_collector_spark.sinks import read_collection_grouped
-
-    src = tmp_path / "in"
-    src.mkdir()
-    (src / "batch0.txt").write_text("\n".join(
-        [_envelope(i) for i in range(3)]
-        + [_late_envelope(i) for i in range(2)]))
-    (tmp_path / "hist").mkdir()
-    cfg = {
-        "format": "fabric",
-        "source": {"type": "file", "path": str(src)},
-        "target": {"type": "parquet", "base": str(tmp_path / "tables")},
-        "catalog_path": str(tmp_path / "catalog.json"),
-        "checkpoint": str(tmp_path / "ckpt"),
-        "historical": {"dir": str(tmp_path / "hist")},
-        "dedup": False,
-        "layout": "grouped",
-        "shard_time": "2024-01-02 00:00:00",
-        "now": "2024-01-01",
-    }
-    for _ in range(2):      # the second start drains what the first missed
-        for q in app.start(spark, cfg):
-            assert q.awaitTermination(120)
-    got = read_collection_grouped(spark, cfg["target"]["base"], "p", "ev",
-                                  Catalog(cfg["catalog_path"]))
-    assert sorted(r["_user"] for r in got.collect()) == \
-        ["late0", "late1", "u0", "u1", "u2"]
 
 
 def test_app_error_rate_kill_switch_trips(spark, tmp_path):

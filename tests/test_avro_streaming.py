@@ -643,3 +643,136 @@ def test_avro_k3_split_replays_no_state_changelog(spark, tmp_path):
     assert stats.records == {("p1", "t0"): 12, ("p1", "t1"): 12}
     assert (sum(e[1] for e in mon._events),
             sum(e[2] for e in mon._events)) == (24, 4)
+
+
+def test_avro_manifested_epoch_jobs_same_for_five_collections_as_two(
+        spark, tmp_path, epoch_jobs):
+    """The Avro decoder returns schema groups, so a manifested data
+    epoch writes one parquet job per group: with dedup, the raw-frame
+    spool and the counters on, 5 same-schema collections run no more
+    jobs than 2."""
+    from rakam_api_collector_spark.streaming.committer import (
+        ErrorRateMonitor, IngestStats)
+
+    cat = Catalog(str(tmp_path / "catalog.json"))
+    fields = None
+    for c in range(5):
+        fields = cat.create_table("p1", f"t{c}", EXTRA)
+
+    def data_epoch_jobs(n_collections):
+        name = f"n{n_collections}"
+        src = tmp_path / f"src_{name}"
+        _write_parquet_bursts(src, [[
+            _frame(fields, f"u{c}-{i}", f"2020-06-01T10:{c:02d}:{i:02d}",
+                   float(i), collection=f"t{c}")
+            for c in range(n_collections) for i in range(3)]])
+        stats = IngestStats()
+        epoch_jobs.clear()
+        q = start_avro_ingest_stream(
+            spark, None, cat, str(tmp_path / f"tables_{name}"),
+            checkpoint=str(tmp_path / f"ckpt_{name}"), project="p1",
+            historical_dir=str(tmp_path / f"hist_{name}"),
+            now=NOW, shard_time=SHARD_T, dedup=True, manifested=True,
+            stats=stats, error_monitor=ErrorRateMonitor(),
+            source_stream=spark.readStream.schema("value binary")
+            .parquet(str(src)))
+        assert q.awaitTermination(120)
+        assert stats.total_records() == 3 * n_collections
+        [(epoch, n)] = [(p["batchId"], p["numInputRows"])
+                        for p in q.recentProgress if p["numInputRows"]]
+        return epoch_jobs[epoch]
+
+    two, five = data_epoch_jobs(2), data_epoch_jobs(5)
+    assert five <= two, (two, five)
+
+
+def test_avro_grouped_commit_matches_per_table_write(spark, tmp_path):
+    """An Avro epoch committed from its schema groups
+    (``_commit_tables(res, …)``) gives each collection what the
+    per-collection write gives it (``_commit_tables(dict(res), …)``):
+    the same entry rows, batch id and schema, and the same ``read()``
+    and ``format("manifest")`` rows and column order. ``t`` and ``u``
+    share a schema group and ``t`` also gets bulk rows, ``b`` has bulk
+    rows only, ``s`` has its own schema and a CHECK constraint, and
+    ``_shard_time`` is backfilled. While the constraint refuses, both
+    paths raise and ``s`` stays empty; once it passes, the replay of
+    the same batch id commits every collection alike."""
+    import pytest
+
+    from rakam_api_collector_spark.datasource import ManifestDataSource
+    from rakam_api_collector_spark.ingest.avro import extract_stream_routing
+    from rakam_api_collector_spark.manifest import (ConstraintViolation,
+                                                    ManifestedTable)
+    from rakam_api_collector_spark.streaming.pipeline import (
+        _commit_tables, _decode_avro_frames)
+
+    spark.dataSource.register(ManifestDataSource)
+    cat = Catalog(str(tmp_path / "catalog.json"))
+    f_t = cat.create_table("p1", "t", EXTRA)
+    cat.create_table("p1", "u", EXTRA)
+    f_b = cat.create_table("p1", "b", EXTRA)
+    f_s = cat.create_table("p1", "s", [
+        T.StructField("label", T.StringType()),
+        T.StructField("v", T.DoubleType())])
+    obj = A.encode_bulk_stream("p1", [
+        ("t", f_t, 4, [[None, _ms("2020-06-02T08:00:00"), "bt", 7.0]]),
+        ("b", f_b, 4, [[None, _ms("2020-06-01T08:00:00"), "bb", 8.0]])])
+    bulk_base = tmp_path / "bulk"
+    bulk_base.mkdir()
+    (bulk_base / "obj1").write_bytes(obj)
+    frames = [_frame(f_t, f"{c}{i}", f"2020-06-0{i % 2 + 1}T10:00:0{i}",
+                     float(i), collection=c)
+              for c in ("t", "u") for i in range(3)]
+    frames += [A.encode_stream_record(
+        f_s, [None, _ms(f"2020-06-01T11:00:0{i}"), f"s{i}", f"x{i}",
+              -float(i)], collection="s") for i in range(3)]
+    frames.append(A.encode_bulk_pointer("obj1", len(obj)))
+    routed = extract_stream_routing(
+        spark.createDataFrame([(f,) for f in frames], "value binary"),
+        cat.get_columns, "p1")
+    colls = ("t", "u", "b", "s")
+    gbase, tbase = str(tmp_path / "grouped"), str(tmp_path / "per_table")
+
+    def commit(grouped: bool):
+        res = _decode_avro_frames(spark, routed, cat.get_columns, "p1",
+                                  None, str(bulk_base), SHARD_T)
+        try:
+            if grouped:         # every collection in exactly one group
+                assert sorted(c for _, cs, _ in res.groups for c in cs) \
+                    == sorted(colls)
+                return _commit_tables(res, gbase, True, "ckpt", 0)
+            return _commit_tables(dict(res), tbase, True, "ckpt", 0)
+        finally:
+            res.unpersist()
+
+    guarded = [ManifestedTable(b, "p1", "s") for b in (gbase, tbase)]
+    for t in guarded:
+        t.add_constraint("v_floor", "v >= 0")
+    for grouped in (True, False):
+        with pytest.raises(ConstraintViolation, match="v_floor"):
+            commit(grouped)
+    assert [t.committed() for t in guarded] == [[], []]
+    for t in guarded:
+        t.drop_constraint("v_floor")
+        t.add_constraint("v_floor", "v >= -10")
+
+    want = {("p1", "t"): 4, ("p1", "u"): 3, ("p1", "b"): 1, ("p1", "s"): 3}
+    assert commit(True) == commit(False) == want
+
+    def sort(rows):
+        return sorted(tuple(r) for r in rows)
+
+    for c in colls:
+        g, t = (ManifestedTable(b, "p1", c) for b in (gbase, tbase))
+        [eg], [et] = g.committed(), t.committed()
+        assert (eg["rows"], eg["batch"], eg["schema"]) == \
+            (et["rows"], et["batch"], et["schema"]), c
+        rg, rt = g.read(spark), t.read(spark)
+        assert rg.columns == rt.columns == \
+            [f.name for f in cat.get_columns("p1", c)] + ["_day"]
+        assert sort(rg.collect()) == sort(rt.collect()), c
+        assert all(r["_shard_time"] is not None for r in rg.collect())
+        mg, mt = (spark.read.format("manifest").option("path", x.table_dir)
+                  .load() for x in (g, t))
+        assert mg.columns == mt.columns
+        assert sort(mg.collect()) == sort(mt.collect()), c

@@ -2456,10 +2456,10 @@ def test_grouped_commit_matches_per_table_write(spark, tmp_path):
 
 
 def test_grouped_commit_constrained_table_still_refuses(spark, tmp_path):
-    """A table with a CHECK constraint keeps the per-collection write
-    (its check runs on a localCheckpoint of the rows it persists) while
-    the rest of its schema group commits from one write: violating rows
-    are refused and leave that table empty, clean rows commit."""
+    """A table with a CHECK constraint commits from its schema group's
+    one write too: its check runs on the staged files, the rows it would
+    commit. Violating rows refuse the epoch and leave that table empty;
+    with a looser bound every collection commits."""
     from rakam_api_collector_spark.ingest import Catalog
     from rakam_api_collector_spark.manifest import ConstraintViolation
     from rakam_api_collector_spark.streaming.pipeline import _commit_tables

@@ -477,14 +477,13 @@ def test_duplicate_span_removal_shuffles_only_on_keys(spark, monkeypatch):
 
 
 def test_grouped_sink_microbatch_writer_fanout_not_coalesced(spark):
-    """The grouped-layout sink's micro-batch shuffle (the r8/r9
+    """The grouped write's micro-batch shuffle (the r8/r9
     streaming-budget miss, fixed in r10): a 30k-row micro-batch is far
-    below AQE's advisory partition size, so a `rebalance` hint lets
+    below AQE's advisory partition size, so a `rebalance` hint would let
     AQEShuffleRead coalesce the writer exchange to ONE task that
-    serializes ~100 partition-dir writes. The default regime
-    (writer_tasks=0 → repartition(defaultParallelism, keys)) must emit
-    a fixed-N REPARTITION_BY_NUM exchange, which AQE never coalesces —
-    pin both regimes so the fix can't silently regress."""
+    serializes ~100 partition-dir writes. The writer frame must be a
+    keyed REPARTITION_BY_NUM exchange at defaultParallelism, which AQE
+    never coalesces."""
     from rakam_api_collector_spark.sinks import _grouped_writer_frame
 
     df = (spark.range(30_000)
@@ -493,26 +492,13 @@ def test_grouped_sink_microbatch_writer_fanout_not_coalesced(spark):
                   F.col("id")))
     parts = ["_collection", "_day"]
 
-    fixed = _grouped_writer_frame(df, parts, 8)
-    fixed.collect()
-    ran = fixed._jdf.queryExecution().executedPlan().toString()
-    assert "REPARTITION_BY_NUM" in ran
-    assert "hashpartitioning(_collection" in ran   # keyed, not round-robin
-    assert "AQEShuffleRead coalesced" not in ran   # N writer tasks survive
-
-    default = _grouped_writer_frame(df, parts, 0)
+    out = _grouped_writer_frame(df, parts)
+    out.collect()
+    ran = out._jdf.queryExecution().executedPlan().toString()
     n = spark.sparkContext.defaultParallelism
-    assert f", {n}), REPARTITION_BY_NUM" in \
-        default._jdf.queryExecution().executedPlan().toString()
-
-    bulk = _grouped_writer_frame(df, parts, None)
-    bulk.collect()
-    ran = bulk._jdf.queryExecution().executedPlan().toString()
-    # the bulk regime deliberately opts in to advisory sizing: on a
-    # micro-batch that MUST show up as a coalesced shuffle read —
-    # proof this regime is wrong for streaming and stays opt-in
-    assert "REBALANCE_PARTITIONS_BY_COL" in ran
-    assert "AQEShuffleRead coalesced" in ran
+    assert f", {n}), REPARTITION_BY_NUM" in ran
+    assert "hashpartitioning(_collection" in ran   # keyed, not round-robin
+    assert "AQEShuffleRead coalesced" not in ran   # n writer tasks survive
 
 
 def test_phash_hot_bucket_star_broadcasts_representatives(spark):

@@ -286,47 +286,6 @@ def test_stream_late_split_spools_historical_and_replays(spark, tmp_path):
     assert sorted(r["v"] for r in merged.collect()) == [1.0, 2.0]
 
 
-def test_stream_grouped_layout_commit(spark, tmp_path):
-    """layout='grouped' commits one write job per schema group into the
-    Hive-partitioned layout; collections read back (partition-pruned)
-    with the same rows and dedup/late-split semantics intact."""
-    import pytest
-
-    from rakam_api_collector_spark.sinks import read_collection_grouped
-
-    lines = []
-    for c in ("a", "b", "c"):
-        lines += [fabric(c, {"_time": "2020-06-01T10:00:0%d" % i,
-                             "_user": f"u_{c}{i}", "v": i})
-                  for i in range(3)]
-    # a duplicate (same _user/_time) that dedup must drop
-    lines.append(fabric("a", {"_time": "2020-06-01T10:00:00",
-                              "_user": "u_a0", "v": 99}))
-    src = tmp_path / "src"
-    _write_lines(src, lines)
-    cat = Catalog()
-    q = start_ingest_stream(
-        spark, str(src), "fabric", cat,
-        table_base=str(tmp_path / "tables"),
-        checkpoint=str(tmp_path / "ckpt"),
-        now=NOW, shard_time=SHARD_T, dedup=True,
-        layout="grouped")
-    q.awaitTermination(120)
-
-    for c in ("a", "b", "c"):
-        df = read_collection_grouped(spark, str(tmp_path / "tables"),
-                                     "testproject", c, cat)
-        assert sorted(r["v"] for r in df.collect()) == [0.0, 1.0, 2.0]
-
-    with pytest.raises(ValueError, match="grouped"):
-        start_ingest_stream(
-            spark, str(src), "fabric", cat,
-            table_base=str(tmp_path / "t2"),
-            checkpoint=str(tmp_path / "c2"),
-            now=NOW, shard_time=SHARD_T,
-            layout="grouped", manifested=True)
-
-
 def test_injected_source_stream_feeds_pipeline(spark, tmp_path):
     """The connector entry point: a streaming DataFrame with a binary
     ``value`` column (the Kafka wire shape) injected via source_stream
@@ -737,27 +696,25 @@ def test_stream_counters_with_check_constraint(spark, tmp_path):
 
 
 def test_stream_counters_plain_and_grouped(spark, tmp_path):
-    """Plain and grouped commits count through Observations riding the
-    writes: exact per-collection rows, and malformed envelopes (dropped
-    by the parser) count as failures."""
+    """Plain commits count through Observations riding the writes:
+    exact per-collection rows, and malformed envelopes (dropped by the
+    parser) count as failures."""
     from rakam_api_collector_spark.streaming.committer import (
         ErrorRateMonitor, IngestStats)
 
-    for layout in ("per-table", "grouped"):
-        src = tmp_path / f"src_{layout}"
-        _write_lines(src, _burst(3, per=2) + ['{"data": {broken'])
-        stats, mon = IngestStats(), ErrorRateMonitor()
-        q = start_ingest_stream(
-            spark, str(src), "fabric", Catalog(),
-            table_base=str(tmp_path / f"tables_{layout}"),
-            checkpoint=str(tmp_path / f"ckpt_{layout}"),
-            now=NOW, shard_time=SHARD_T, dedup=False, layout=layout,
-            stats=stats, error_monitor=mon)
-        assert q.awaitTermination(120)
-        assert stats.records == {("testproject", f"c{c}"): 2
-                                 for c in range(3)}, layout
-        assert (sum(e[1] for e in mon._events),
-                sum(e[2] for e in mon._events)) == (6, 1), layout
+    src = tmp_path / "src"
+    _write_lines(src, _burst(3, per=2) + ['{"data": {broken'])
+    stats, mon = IngestStats(), ErrorRateMonitor()
+    q = start_ingest_stream(
+        spark, str(src), "fabric", Catalog(),
+        table_base=str(tmp_path / "tables"),
+        checkpoint=str(tmp_path / "ckpt"),
+        now=NOW, shard_time=SHARD_T, dedup=False,
+        stats=stats, error_monitor=mon)
+    assert q.awaitTermination(120)
+    assert stats.records == {("testproject", f"c{c}"): 2 for c in range(3)}
+    assert (sum(e[1] for e in mon._events),
+            sum(e[2] for e in mon._events)) == (6, 1)
 
 
 # --- manifested grouped commit: replay and crash -----------------------------
@@ -768,8 +725,10 @@ def test_manifested_grouped_commit_replay_and_crash(spark, tmp_path,
     contract. A replayed epoch (its ``commits/N`` deleted) replaces
     every collection's batch and duplicates none. An attempt that dies
     after writing its staging dir but before renaming it leaves files
-    that ``read()``, ``format("manifest")`` and ``run_maintenance``
-    ignore, and the replay of that epoch removes them."""
+    that ``read()`` and ``format("manifest")`` ignore; a maintenance
+    sweep keeps them while they are younger than its grace and deletes
+    them after it, and the replay of that epoch commits each collection
+    once."""
     import os
 
     from pyspark.errors import StreamingQueryException
@@ -836,13 +795,15 @@ def test_manifested_grouped_commit_replay_and_crash(spark, tmp_path,
         assert t.read(spark).count() == 3
         assert spark.read.format("manifest").option("path", t.table_dir) \
             .load().count() == 3
+    run_maintenance(spark, base)            # a fresh dir: within grace
+    assert staged() == [left]
     reports = run_maintenance(spark, base, grace_seconds=0)
     assert sorted((r["project"], r["collection"]) for r in reports) == \
         [("testproject", c) for c in colls]
     assert not [r for r in reports if "error" in r]
-    assert staged() == [left]
+    assert staged() == []
 
-    # the replay of epoch 1 removes the staging dir and commits once
+    # the replay of epoch 1 commits once and leaves no staging dir
     assert run().exception() is None
     assert staged() == []
     for c in colls:
